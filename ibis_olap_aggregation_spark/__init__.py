@@ -12,8 +12,8 @@ Design notes (vs the reference, `/root/reference/`):
   we declare logical plans with the DataFrame API and let Catalyst pick
   physical strategies.
 - the reference runs TWO recursive CTEs (reporting dim, then closure).
-  We run ONE level-bounded iterative walk for the reporting dim and
-  derive the closure by exploding the materialized root-to-node path —
+  We run ONE depth-bounded walk for the reporting dim (driver-local
+  for dim-sized tables, path doubling above that) and derive the closure by exploding the materialized root-to-node path —
   no second recursion (see ``hierarchy.py``).
 - sibling order is deterministic (sort-key path), fixing the
   reference's UUID-ordered non-determinism

@@ -4,18 +4,20 @@ Spark-first reimplementation of the reference's ``HierarchyDimension``
 (reference classes/hierarchy_dimension_table.py:46-223), which generates
 two DuckDB recursive CTEs. Differences by design:
 
-- ONE depth-bounded iterative walk (plain broadcast-join + union per
-  level) materializes each node's root-to-self path as
-  ``array<struct>``; the transitive closure ("aggregation dim") is then
-  derived by ``posexplode`` of that path — the reference's *second*
-  recursive CTE (ref :167-223) is unnecessary.
+- ONE depth-bounded walk materializes each node's root-to-self path;
+  the transitive closure ("aggregation dim") is then derived by
+  ``posexplode`` of that path — the reference's *second* recursive CTE
+  (ref :167-223) is unnecessary. The walk is chosen by node count: a
+  driver-local DFS over one Arrow fetch up to ``_LOCAL_WALK_LIMIT``
+  nodes, pointer-jumping path doubling (O(log depth) self-join rounds)
+  above it or when Arrow cannot carry the node table.
 - Sibling order is DETERMINISTIC: a sort-key path (array of the sibling
   sort key at each level) replaces the reference's ``row_number`` over a
   stringified UUID path (ref :133-139), which is non-deterministic per
   build and a single-partition window besides. The dense
   ``node_sort_order`` integer is computed scalably (range-partition +
   per-partition row_number + offsets), not with a global window.
-- Cycle/orphan semantics (uniform across strategies): a cycle in
+- Cycle/orphan semantics (the same on both walks): a cycle in
   parent_node_id can never be root-reachable (every node has ONE parent
   pointer, so walking down from roots cannot enter a cycle) — cycles are
   always detached islands. Builds with ``materialize=True`` detect them
@@ -37,7 +39,7 @@ aggregation dim / closure (ref :197-218): ancestor_<col> +
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -129,30 +131,30 @@ class HierarchyDimension:
         to ``node_natural_key`` when present else the node id. (The
         reference orders by stringified UUID paths — non-deterministic;
         SURVEY.md §7.5.1.)
-    max_depth : recursion guard; a frontier still non-empty at this
-        depth (cycle, or genuinely deeper) raises ValueError.
+    max_depth : depth guard; a hierarchy deeper than this raises
+        ValueError (cycles are never root-reachable, so they cannot
+        trip it — the reach check names them).
     flatten_levels : number of ``level_{i}_*`` column groups in the
         reporting dim (the reference hardcodes 10; ref :147).
-    materialize : cache the walk result (it feeds both dims), mirroring
-        the reference's CTAS-then-reread (ref :162-173).
-    strategy : ``"local"`` = driver-side DFS, bounded at 250k nodes —
-        dimension hierarchies are dim-sized, and below that bound every
-        distributed walk pays per-round job-scheduling costs that dwarf
-        the actual pointer chasing; ``"doubling"`` = pointer-jumping
-        path doubling, O(log depth) self-joins — ceil(log2 depth)+1
-        rounds regardless of node count, each round localCheckpointed so
-        the plan stays O(1); ``"cte"`` = Spark >= 4.0 native WITH
-        RECURSIVE — the whole walk is ONE query (one scheduling
-        round-trip per build) but O(depth) internal iterations;
-        ``"iterative"`` = portable driver loop, one join+union per level
-        (the path for engines without recursive CTEs). ``"auto"`` =
-        local when the (materialized) node count is under the bound,
-        else doubling — measured on local[32] doubling wins at BOTH
-        distributed ends: 4.6s vs 14.7s (cte) on a 15k-node depth-4 geo
-        dim at sf0.1, and 7.7s vs 46.8s (cte) on a 65k-node depth-16
-        binary tree, because wall time is dominated by scheduling rounds
-        and re-analysis. All four produce identical output
-        (agreement-tested).
+    materialize : cache the walk result and both dims (the walk feeds
+        both), mirroring the reference's CTAS-then-reread (ref
+        :162-173), and run the reach check that names cycles. It does
+        not choose the walk.
+    compute_sort_order : False skips the ranking passes entirely
+        (``node_sort_order`` comes back NULL): rollup correctness never
+        depends on display order, so pure-aggregation consumers of big
+        dims need not pay the extra count/sample/shuffle rounds.
+
+    The walk is chosen by node count alone. Up to ``_LOCAL_WALK_LIMIT``
+    (250k) nodes the node table is fetched to the driver as one Arrow
+    table and walked there (:meth:`_walk_local`): dimension hierarchies
+    are dim-sized, and below that bound a distributed walk pays
+    per-round job-scheduling costs that dwarf the actual pointer
+    chasing. Above the bound, or when Arrow cannot carry the node
+    table's types, the walk is pointer-jumping path doubling
+    (:meth:`_walk_doubling`): ceil(log2 depth)+1 self-join rounds
+    regardless of node count, each round localCheckpointed so the plan
+    stays O(1). Both produce identical output (agreement-tested).
     """
 
     def __init__(
@@ -166,124 +168,53 @@ class HierarchyDimension:
         max_depth: int = 32,
         flatten_levels: int = 10,
         materialize: bool = True,
-        strategy: str = "auto",
         compute_sort_order: bool = True,
     ):
         self.dimension_name = dimension_name
         self.max_depth = max_depth
         self.flatten_levels = flatten_levels
-        self.strategy = strategy
-        # compute_sort_order=False skips the ranking passes entirely
-        # (node_sort_order comes back NULL): rollup correctness never
-        # depends on display order, so pure-aggregation consumers of big
-        # dims shouldn't pay the extra count/sample/shuffle rounds.
         self.compute_sort_order = compute_sort_order
         self._nodes_base = None
         self._n_nodes: int | None = None
-        self._local_rows = None
         self._walked_local_count: int | None = None
-        # compact-path artifacts of the columnar local walk (r14): the
-        # checkpointed frame with integer ancestor-index paths and the
-        # single-row broadcast attribute table. When set, the closure and
-        # reporting builders read THESE directly — one element_at per
-        # ancestor reference — instead of re-assembling the full
-        # node_json_path struct array per walked row only to explode or
-        # index it (measured 0.35 -> 2.59s on the 983k-pair deep-binary
-        # closure when the explode ran over the reconstructing view).
+        self._levels: list[DataFrame] = []
+        # compact-path artifacts of the local walk: the checkpointed
+        # frame with integer ancestor-index paths and the single-row
+        # broadcast attribute table. When set, the closure and reporting
+        # builders read THESE directly — one element_at per ancestor
+        # reference — instead of re-assembling the full node_json_path
+        # struct array per walked row only to explode or index it
+        # (measured 0.35 -> 2.59s on the 983k-pair deep-binary closure
+        # when the explode ran over the reconstructing view).
         self._compact = None
         self._attr_row = None
-        if materialize and strategy in ("auto", "local"):
-            # ONE bounded collect doubles as the size probe and the
-            # local-walk input: dim-sized tables (the common case) never
-            # pay a cache-fill + count + repartition round-trip at all.
-            # The collect reads the NARROW prepared form (no is_leaf
-            # anti-join — that's a distinct+shuffle of the node table)
-            # and derives both flags on the driver from the same rows.
-            narrow = prepare_nodes(
-                nodes, node_id_col, parent_node_id_col, with_leaf=False
-            )
-            # Size guard WITHOUT a job: the optimizer's sizeInBytes
-            # estimate (parquet file sizes for scans) bounds what a
-            # direct Arrow fetch can pull to the driver. Under the bound
-            # we fetch immediately and use len() as the row probe — one
-            # job total. (A count-then-fetch runs the node-table plan
-            # twice — measured 1.6s extra per sf0.1 geo build; a bounded
-            # limit().collect() is worse still: CollectLimit's serial
-            # scale-up rounds measured 3.1s.) The fast path is gated
-            # THREE ways — the estimate must exist, must be produced by
-            # a plan whose default size estimation cannot UNDER-estimate
-            # (no Generate/Join/Window/Expand: e.g. Generate reports its
-            # pre-explosion child size, so an exploded node table looks
-            # tiny), and must imply a ROW count under the walk limit at
-            # a conservative per-row width (on-disk bytes vastly
-            # understate in-memory Python row cost: a narrow 2-column
-            # table near the byte bound alone can be tens of millions
-            # of rows). Anything else counts first — one extra job, only
-            # for inputs that were never dim-shaped to begin with.
-            n = None
-            fetch_direct = False
-            if self._plan_estimate_is_safe(narrow):
-                try:
-                    approx_bytes = int(
-                        narrow._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-                    )
-                except Exception:  # noqa: BLE001 - stats unavailable (e.g. connect)
-                    approx_bytes = None
-                if approx_bytes is not None and approx_bytes <= self._LOCAL_FETCH_MAX_BYTES:
-                    est_rows = approx_bytes // self._est_row_width(narrow.schema)
-                    fetch_direct = est_rows <= self._LOCAL_WALK_LIMIT
-            if not fetch_direct:
-                n = narrow.count()
-            if n is None or n <= self._LOCAL_WALK_LIMIT:
-                tbl = self._fetch_local_table(narrow)
-                if tbl is not None and tbl.num_rows <= self._LOCAL_WALK_LIMIT:
-                    # columnar is_leaf derivation — single-column
-                    # to_pylist, no per-row dicts (guide §4)
-                    import pyarrow as pa
-
-                    pid = tbl.column("parent_node_id").to_pylist()
-                    nid = tbl.column("node_id").to_pylist()
-                    pset = {p for p in pid if p is not None}
-                    self._local_rows = tbl.append_column(
-                        "is_leaf", pa.array([v not in pset for v in nid], pa.bool_())
-                    )
-                    self._n_nodes = tbl.num_rows
-                elif tbl is None:
-                    dicts = self._fetch_local(narrow)
-                    if len(dicts) <= self._LOCAL_WALK_LIMIT:
-                        parent_ids = {
-                            d["parent_node_id"]
-                            for d in dicts
-                            if d["parent_node_id"] is not None
-                        }
-                        for d in dicts:
-                            d["is_leaf"] = d["node_id"] not in parent_ids
-                        self._local_rows = dicts
-                        self._n_nodes = len(dicts)
-                    else:
-                        dicts = None  # larger than the bound: distributed walk
-        # prepared AFTER the local-fetch block so that when the walk is
-        # local the leaf join's regime resolves from the just-learned
-        # node count instead of a probe job (the probe ran at
-        # construction even though the prepared frame is never executed
-        # on the local path — one count job per dim build, measured
-        # ~0.7s on the sf0.1 geo build). The walk re-joins nodes once
-        # per level on the distributed paths, and derived node tables
-        # (e.g. DISTINCT-built brand/type levels) would otherwise
-        # re-shuffle on every iteration — hence the cache below.
+        local = self._fetch_if_dim_sized(
+            prepare_nodes(nodes, node_id_col, parent_node_id_col, with_leaf=False)
+        )
+        if local is not None:
+            self._n_nodes = local.num_rows
+        # prepared AFTER the local fetch so that when the walk is local
+        # the leaf join's regime resolves from the just-learned node
+        # count instead of a probe job (the probe ran at construction
+        # even though the prepared frame is never executed on the local
+        # path — one count job per dim build, measured ~0.7s on the
+        # sf0.1 geo build). The doubling walk re-joins nodes once per
+        # round, and derived node tables (e.g. DISTINCT-built brand/type
+        # levels) would otherwise re-shuffle on every round — hence the
+        # cache below.
         self.nodes = prepare_nodes(
             nodes, node_id_col, parent_node_id_col, known_rows=self._n_nodes
         )
-        if materialize and self._local_rows is None:
+        if materialize and local is None:
             # distributed path: cache the (possibly expensive)
             # source-derived node table while we count it; released after
             # the walk is materialized (the repartitioned cache takes over)
             self._nodes_base = self.nodes.cache()
             # Size the walk's parallelism to the DIMENSION, not to the
             # partitioning the source scans happened to leave behind:
-            # each recursion level is a job over these partitions, so a
-            # 15k-node dim spread over 32+ scan partitions pays pure
-            # task-scheduling overhead per level (measured 2.4x slower).
+            # each round is a job over these partitions, so a 15k-node
+            # dim spread over 32+ scan partitions pays pure
+            # task-scheduling overhead per round (measured 2.4x slower).
             # ~250k nodes/partition, floor 4 (cluster-safe: dims are
             # dim-sized), cap at the session shuffle width.
             n = self._nodes_base.count()  # also materializes the cache
@@ -302,22 +233,10 @@ class HierarchyDimension:
         # iterates the nodes query's columns; ref :25-43,102-109)
         self._struct_cols = list(self.nodes.columns)
 
-        strat = strategy
-        if strat == "auto":
-            # dim-sized node tables walk on the DRIVER: a 1.5k-node geo
-            # dim costs ~4.5s of pure job-scheduling overhead through the
-            # distributed walk (3+ self-join rounds, each an eager
-            # checkpoint + isEmpty probe) vs milliseconds of BFS. Same
-            # bounded-driver-compute pattern as the union-find probe in
-            # dedup: explicit row limit, distributed path above it.
-            strat = "local" if self._local_rows is not None else "doubling"
-        walkers = {
-            "cte": self._walk_cte,
-            "iterative": self._walk,
-            "doubling": self._walk_doubling,
-            "local": self._walk_local,
-        }
-        self._walked = walkers[strat]()
+        if local is not None:
+            self._walked = self._walk_local(local)
+        else:
+            self._walked = self._walk_doubling()
         if materialize:
             if self._walked_local_count is not None:
                 # the local walk already knows its row count AND is
@@ -343,6 +262,62 @@ class HierarchyDimension:
             # consumer re-runs the path-explode + sort-order join
             self.reporting_dim = self.reporting_dim.cache()
             self.aggregation_dim = self.aggregation_dim.cache()
+
+    def _fetch_if_dim_sized(self, narrow: DataFrame):
+        """The node table as a driver Arrow table (with ``is_leaf``
+        derived on the driver) when it has at most ``_LOCAL_WALK_LIMIT``
+        rows and Arrow can carry its types; otherwise None, and the
+        doubling walk runs.
+
+        ONE bounded fetch doubles as the size probe and the local-walk
+        input, so dim-sized tables (the common case) never pay a
+        cache-fill + count + repartition round-trip. It reads the NARROW
+        prepared form (no is_leaf anti-join — that's a distinct+shuffle
+        of the node table).
+
+        Size guard WITHOUT a job: the optimizer's sizeInBytes estimate
+        (parquet file sizes for scans) bounds what a direct Arrow fetch
+        can pull to the driver. Under the bound the table is fetched
+        immediately and its length is the row probe — one job total. (A
+        count-then-fetch runs the node-table plan twice — measured 1.6s
+        extra per sf0.1 geo build; a bounded limit().collect() is worse
+        still: CollectLimit's serial scale-up rounds measured 3.1s.) The
+        fast path is gated THREE ways — the estimate must exist, must be
+        produced by a plan whose default size estimation cannot
+        UNDER-estimate (no Generate/Join/Window/Expand: e.g. Generate
+        reports its pre-explosion child size, so an exploded node table
+        looks tiny), and must imply a ROW count under the walk limit at a
+        conservative per-row width (on-disk bytes vastly understate
+        in-memory row cost: a narrow 2-column table near the byte bound
+        alone can be tens of millions of rows). Anything else counts
+        first — one extra job, only for inputs that were never
+        dim-shaped to begin with.
+        """
+        import pyarrow as pa
+
+        fetch_direct = False
+        if self._plan_estimate_is_safe(narrow):
+            try:
+                approx_bytes = int(
+                    narrow._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+                )
+            except Exception:  # noqa: BLE001 - stats unavailable (e.g. connect)
+                approx_bytes = None
+            if approx_bytes is not None and approx_bytes <= self._LOCAL_FETCH_MAX_BYTES:
+                est_rows = approx_bytes // self._est_row_width(narrow.schema)
+                fetch_direct = est_rows <= self._LOCAL_WALK_LIMIT
+        if not fetch_direct and narrow.count() > self._LOCAL_WALK_LIMIT:
+            return None
+        tbl = self._fetch_local_table(narrow)
+        if tbl is None or tbl.num_rows > self._LOCAL_WALK_LIMIT:
+            return None
+        # columnar is_leaf derivation — single-column to_pylist, no
+        # per-row dicts
+        pset = {p for p in tbl.column("parent_node_id").to_pylist() if p is not None}
+        nid = tbl.column("node_id").to_pylist()
+        return tbl.append_column(
+            "is_leaf", pa.array([v not in pset for v in nid], pa.bool_())
+        )
 
     # -- unreached-node classification (cycle vs orphan) -----------------
     _UNREACHED_DRIVER_LIMIT = 100_000
@@ -383,170 +358,47 @@ class HierarchyDimension:
         return max(width, 8)
 
     @staticmethod
-    def _fetch_local(df: DataFrame) -> list[dict]:
-        """Fetch a (pre-bounded) node table to driver dicts via Arrow —
-        one parallel job; falls back to row collect for types Arrow
-        can't convert."""
-        try:
-            return df.toArrow().to_pylist()
-        except Exception:  # noqa: BLE001 - exotic type unsupported by Arrow
-            return [r.asDict(recursive=False) for r in df.collect()]
-
-    @staticmethod
     def _fetch_local_table(df: DataFrame):
         """Fetch a (pre-bounded) node table as a driver Arrow TABLE —
-        the columnar fast path's input (no per-row dict construction at
-        all; guide §4). None for types Arrow can't convert — callers
-        fall back to the dict fetch + dict walk."""
+        the local walk's input. None for types Arrow can't convert
+        (e.g. intervals): those tables take the doubling walk."""
         try:
             return df.toArrow()
         except Exception:  # noqa: BLE001 - exotic type unsupported by Arrow
             return None
 
-    # -- stage 1d: driver-local walk for dim-sized node tables -----------
-    def _walk_local(self) -> DataFrame:
-        """Driver-side DFS producing the identical walked schema
-        (attrs + level_number + node_json_path + _sort_path +
-        node_sort_order).
+    # -- stage 1a: driver-local walk for dim-sized node tables -----------
+    def _walk_local(self, tbl) -> DataFrame:
+        """Driver-side DFS over the fetched Arrow node table, producing
+        the walked schema (attrs + level_number + node_json_path +
+        _sort_path + node_sort_order) that :meth:`_walk_doubling` emits.
 
         Dimension hierarchies are dim-sized by definition; under
         ``_LOCAL_WALK_LIMIT`` nodes the adjacency list fits trivially in
-        driver memory and the walk is pointer chasing — every distributed
-        strategy pays per-ROUND scheduling costs that dwarf it. Two
-        further constants fall out for free:
+        driver memory and the walk is pointer chasing — the distributed
+        walk pays per-ROUND scheduling costs that dwarf it. Further
+        constants fall out for free:
 
         - siblings are visited in sort-key order, so the DFS preorder IS
           the dense depth-first rank — ``node_sort_order`` is a counter,
           and the distributed 3-pass ranker (count + per-partition rank +
           offset join) is skipped entirely;
-        - rows ship to the JVM as ONE Arrow table
-          (``pa.Table.from_pylist`` against the exact Spark schema) —
-          measured 2.8s vs 10.4s for the pickle path on the 65k-node
-          binary tree, whose paths hold ~1M struct entries.
+        - the DFS runs over row INDICES of the Arrow table and the walked
+          table is assembled with vectorized ``take`` gathers — no
+          per-row Python objects on either side. A node's path is its
+          ancestor index chain, so the flattened path is a single take
+          of each attribute column.
 
-        Output parallelism is restored via createDataFrame (the dims
-        derived from it are joined/broadcast exactly as with the other
-        walkers). Orphans are dropped (start-at-roots semantics) and
-        cycles are left unreached for the uniform reach-check to
-        classify; depth overflow raises the same error as every other
-        strategy.
+        Orphans are dropped (start-at-roots semantics) and cycles are
+        left unreached for the uniform reach-check to classify; depth
+        overflow raises the same error as the doubling walk.
         """
-        rows = self._local_rows
-        if rows is None:
-            if self.nodes.count() > self._LOCAL_WALK_LIMIT:
-                raise ValueError(
-                    f"strategy='local' is bounded at {self._LOCAL_WALK_LIMIT} "
-                    "nodes — use 'doubling' (or 'auto') for larger hierarchies"
-                )
-            # self.nodes (prepared WITH is_leaf) feeds either path
-            rows = self._fetch_local_table(self.nodes)
-            if rows is None:
-                rows = self._fetch_local(self.nodes)
-        self._local_rows = None  # walked carries the data from here on
-        if not isinstance(rows, list):
-            if rows.num_rows > 0:
-                return self._walk_local_columnar(rows)
-            rows = rows.to_pylist()  # empty table: trivial dict path
-        cols = self._struct_cols
-        sort_key = self.sort_key_col
-        children: dict = {}
-        roots = []
-        for r in rows:
-            d = r if isinstance(r, dict) else r.asDict(recursive=False)
-            if d["is_root"]:
-                roots.append(d)
-            else:
-                children.setdefault(d["parent_node_id"], []).append(d)
-
-        # sibling order = the ranker's lexicographic-_sort_path order:
-        # nulls first (Spark ASC semantics), then key, node_id tiebreak
-        def skey(d):
-            v = d[sort_key]
-            return (v is not None, v, d["node_id"]) if v is not None else (False,)
-
-        roots.sort(key=skey)
-        for lst in children.values():
-            lst.sort(key=skey)
-        rank = self.compute_sort_order
-        out: list[dict] = []
-        # iterative DFS (explicit stack: no recursion limit on deep chains)
-        stack = [(d, 1, (), ()) for d in reversed(roots)]
-        while stack:
-            d, level, path, sort_path = stack.pop()
-            if level > self.max_depth:
-                raise ValueError(
-                    f"hierarchy deeper than max_depth={self.max_depth} "
-                    "(raise max_depth)"
-                )
-            entry = {c: d[c] for c in cols}
-            entry["level_number"] = level
-            path = path + (entry,)
-            sort_path = sort_path + (d[sort_key],)
-            row = {c: d[c] for c in cols}
-            row["level_number"] = level
-            row["node_json_path"] = list(path)
-            row["_sort_path"] = list(sort_path)
-            row["node_sort_order"] = len(out) + 1 if rank else None
-            out.append(row)
-            for ch in reversed(children.get(d["node_id"], ())):
-                stack.append((ch, level + 1, path, sort_path))
-        node_schema = self.nodes.schema
-        path_struct = T.StructType(
-            [node_schema[c] for c in cols]
-            + [T.StructField("level_number", T.IntegerType(), False)]
-        )
-        walked_schema = T.StructType(
-            [node_schema[c] for c in cols]
-            + [
-                T.StructField("level_number", T.IntegerType(), False),
-                T.StructField("node_json_path", T.ArrayType(path_struct), False),
-                T.StructField(
-                    "_sort_path",
-                    T.ArrayType(node_schema[sort_key].dataType),
-                    False,
-                ),
-                T.StructField("node_sort_order", T.IntegerType(), True),
-            ]
-        )
-        spark = self.nodes.sparkSession
-        try:
-            import pyarrow as pa
-            from pyspark.sql.pandas.types import to_arrow_schema
-
-            tbl = pa.Table.from_pylist(out, schema=to_arrow_schema(walked_schema))
-            walked = spark.createDataFrame(tbl)
-        except Exception:  # noqa: BLE001 - exotic type unsupported by Arrow
-            walked = spark.createDataFrame(out, walked_schema)
-        self._levels = []
-        self._walked_local_count = len(out)
-        # Eagerly checkpoint OFF the driver: a local relation embeds its
-        # rows in every task that scans it, so each downstream job that
-        # misses the (evictable) cache re-ships the full path table from
-        # the driver — measured 16s for a 127MB deep-tree walk inside a
-        # loaded session vs 6s isolated. localCheckpoint truncates the
-        # lineage to MEMORY_AND_DISK executor blocks: evictions spill to
-        # disk instead of re-shipping.
-        return walked.localCheckpoint(eager=True)
-
-    def _walk_local_columnar(self, tbl) -> DataFrame:
-        """Columnar form of :meth:`_walk_local`: the DFS runs over row
-        INDICES of the fetched Arrow table and the walked table is
-        assembled with vectorized ``take`` gathers — no per-row Python
-        dicts on either side (guide §4; the dict path built two dicts
-        per node plus one dict per path entry, and ``from_pylist``
-        re-parsed them all). The path column falls out for free: a
-        node's path is its ancestor index chain, so the flattened
-        struct children are a single take of each attribute column.
-        Identical output schema, values, and checkpoint behavior to the
-        dict path (agreement-pinned in tests); sibling order, orphan
-        and cycle semantics are the same code shape line for line."""
         import numpy as np
         import pyarrow as pa
         from pyspark.sql.pandas.types import to_arrow_schema
 
         cols = self._struct_cols
         sort_key = self.sort_key_col
-        tbl = tbl.combine_chunks()
         n = tbl.num_rows
         node_id = tbl.column("node_id").to_pylist()
         parent_id = tbl.column("parent_node_id").to_pylist()
@@ -591,17 +443,16 @@ class HierarchyDimension:
             for ch in reversed(children.get(node_id[i], ())):
                 stack.append((ch, level + 1, path))
         node_schema = self.nodes.schema
-        # r14 compact transfer: the path column used to ship every
-        # ancestor's FULL attribute struct per descendant — sum(depth(n))
-        # structs through createDataFrame AND the eager checkpoint (the
-        # dominant cost of a deep dim build; a 65k-node binary tree
-        # carries ~1M path entries). Ship each node's attributes ONCE
-        # instead: the checkpointed frame stores the path as ancestor
-        # ROW-INDEX arrays (ints), a single-row side frame broadcasts the
-        # attribute structs in original row order, and the returned view
-        # rebuilds node_json_path/_sort_path per row from the broadcast —
-        # same values from the same Arrow arrays, identical walked schema
-        # downstream (agreement-pinned against the dict walk in
+        # compact transfer: shipping every ancestor's FULL attribute
+        # struct per descendant puts sum(depth(n)) structs through
+        # createDataFrame AND the eager checkpoint (the dominant cost of
+        # a deep dim build; a 65k-node binary tree carries ~1M path
+        # entries). Ship each node's attributes ONCE instead: the
+        # checkpointed frame stores the path as ancestor ROW-INDEX arrays
+        # (ints), a single-row side frame broadcasts the attribute
+        # structs in original row order, and the returned view rebuilds
+        # node_json_path/_sort_path per row from the broadcast — the
+        # walked schema the doubling walk emits (agreement-pinned in
         # tests/test_opt_r14.py).
         attr_struct_t = T.StructType([node_schema[c] for c in cols])
         compact_schema = T.StructType(
@@ -614,7 +465,9 @@ class HierarchyDimension:
                 T.StructField("node_sort_order", T.IntegerType(), True),
             ]
         )
-        col_arr = {c: tbl.column(c).chunk(0) for c in cols}
+        # combine_chunks on the column, not the table: an empty table has
+        # no chunk to index
+        col_arr = {c: tbl.column(c).combine_chunks() for c in cols}
         take_o = pa.array(order, type=pa.int64())
         take_p = pa.array(path_flat, type=pa.int64())
         off = np.asarray(path_off, dtype=np.int32)
@@ -628,11 +481,18 @@ class HierarchyDimension:
             else pa.nulls(n_out, pa.int32()),
         ]
         spark = self.nodes.sparkSession
+        # Eagerly checkpoint OFF the driver: a local relation embeds its
+        # rows in every task that scans it, so each downstream job that
+        # misses the (evictable) cache re-ships the table from the
+        # driver — measured 16s for a 127MB deep-tree walk inside a
+        # loaded session vs 6s isolated. localCheckpoint truncates the
+        # lineage to MEMORY_AND_DISK executor blocks: evictions spill to
+        # disk instead of re-shipping.
         compact = spark.createDataFrame(
             pa.Table.from_arrays(
                 compact_arrays, schema=to_arrow_schema(compact_schema)
             )
-        ).localCheckpoint(eager=True)  # same eager off-driver checkpoint
+        ).localCheckpoint(eager=True)
         # one row holding ALL n attribute structs in original row order
         # (node-count-sized, the same bound as the local walk itself);
         # _path_idx entries are 0-based positions into it
@@ -668,7 +528,6 @@ class HierarchyDimension:
             F.expr(sort_expr).alias("_sort_path"),
             F.col("node_sort_order"),
         )
-        self._levels = []
         self._walked_local_count = n_out
         self._compact = compact
         self._attr_row = attr_row
@@ -743,145 +602,9 @@ class HierarchyDimension:
             walked, ["_sort_path"], "node_sort_order", row_count=self._n_nodes
         )
 
-    def _supports_recursive_cte(self) -> bool:
-        try:
-            return int(self.nodes.sparkSession.version.split(".")[0]) >= 4
-        except Exception:
-            return False
-
-    # -- stage 1a: one-shot walk via native recursive CTE (Spark >= 4) ---
-    def _walk_cte(self) -> DataFrame:
-        """Same output as _walk() but as a single WITH RECURSIVE query —
-        Catalyst runs the whole fixpoint in one execution (one driver
-        round-trip instead of one per level). Depth guard via
-        spark.sql.cteRecursionLevelLimit; row limit raised so closures of
-        large dims don't trip the 1M default (SURVEY.md §7.5.5)."""
-        spark = self.nodes.sparkSession
-        view = f"_hier_nodes_{self.dimension_name}"
-        self.nodes.createOrReplaceTempView(view)
-        struct_sql = ", ".join(f"'{c}', n.{c}" for c in self._struct_cols)
-        cols = ", ".join(f"n.{c}" for c in self._struct_cols)
-        sql = f"""
-        WITH RECURSIVE walk AS (
-          SELECT {cols}, 1 AS level_number,
-                 array(named_struct({struct_sql}, 'level_number', 1)) AS node_json_path,
-                 array(n.{self.sort_key_col}) AS _sort_path
-          FROM {view} n WHERE n.is_root
-          UNION ALL
-          SELECT {cols}, w.level_number + 1,
-                 array_append(w.node_json_path,
-                              named_struct({struct_sql}, 'level_number', w.level_number + 1)),
-                 array_append(w._sort_path, n.{self.sort_key_col})
-          FROM {view} n JOIN walk w ON n.parent_node_id = w.node_id
-        )
-        SELECT * FROM walk
-        """
-        # Recursion-limit confs are session-global and read at EXECUTION
-        # time, so: (1) save/restore them around the build; (2) force the
-        # fixpoint via an EAGER localCheckpoint — the result is
-        # materialized with truncated lineage, so later consumers (or
-        # cache eviction) can never re-run the recursion under someone
-        # else's limits.
-        conf = spark.conf
-        saved = {
-            k: conf.get(k, None)
-            for k in (
-                "spark.sql.cteRecursionLevelLimit",
-                "spark.sql.cteRecursionRowLimit",
-            )
-        }
-        try:
-            conf.set("spark.sql.cteRecursionLevelLimit", str(self.max_depth))
-            conf.set("spark.sql.cteRecursionRowLimit", str(1_000_000_000))
-            walked = spark.sql(sql).localCheckpoint(eager=True)
-        except Exception as e:  # noqa: BLE001 - map recursion-limit to our contract
-            if "RECURSION_LEVEL_LIMIT" in str(e):
-                # the walk only expands root-REACHABLE nodes (a cycle is
-                # never root-reachable — see module docstring), so
-                # tripping the limit means the tree is genuinely deeper
-                raise ValueError(
-                    f"hierarchy deeper than max_depth={self.max_depth} "
-                    "(raise max_depth)"
-                ) from e
-            raise
-        finally:
-            for k, v in saved.items():
-                if v is None:
-                    conf.unset(k)
-                else:
-                    conf.set(k, v)
-        self._levels = [walked]
-        return self._rank(walked)
-
-    # -- stage 1b: level-bounded walk -----------------------------------
-    def _level_struct(self, level: Column) -> Column:
-        return F.struct(
-            *[F.col(c) for c in self._struct_cols], level.alias("level_number")
-        )
-
-    def _walk(self) -> DataFrame:
-        """Root-down walk carrying level_number, node_json_path and the
-        deterministic sort-key path.
-
-        Equivalent to the reference's first recursive CTE (ref :111-131)
-        but as an explicit loop: each iteration is one broadcast-able
-        equi-join child.parent_node_id = frontier.node_id plus a union.
-        Iteration count = hierarchy depth (not data size), so lineage
-        stays shallow; each frontier is cached and the loop stops on an
-        empty frontier.
-        """
-        nodes = self.nodes
-        sort_key = F.col(self.sort_key_col)
-        frontier = nodes.filter(F.col("is_root")).select(
-            *nodes.columns,
-            F.lit(1).alias("level_number"),
-            F.array(self._level_struct(F.lit(1))).alias("node_json_path"),
-            F.array(sort_key).alias("_sort_path"),
-        )
-        levels = [frontier.cache()]
-        depth = 1
-        while True:
-            parent = levels[-1].select(
-                F.col("node_id").alias("_p_id"),
-                F.col("level_number").alias("_p_level"),
-                F.col("node_json_path").alias("_p_path"),
-                F.col("_sort_path").alias("_p_sort"),
-            )
-            lvl = F.col("_p_level") + F.lit(1)
-            child = (
-                nodes.join(parent, nodes["parent_node_id"] == parent["_p_id"], "inner")
-                .select(
-                    *nodes.columns,
-                    lvl.alias("level_number"),
-                    F.array_append(
-                        F.col("_p_path"), self._level_struct(lvl)
-                    ).alias("node_json_path"),
-                    F.array_append(F.col("_p_sort"), sort_key).alias("_sort_path"),
-                )
-            )
-            if child.isEmpty():
-                break
-            depth += 1
-            if depth > self.max_depth:
-                # frontier only ever holds root-reachable nodes (cycles
-                # are never root-reachable), so this is genuine depth
-                raise ValueError(
-                    f"hierarchy deeper than max_depth={self.max_depth} "
-                    "(raise max_depth)"
-                )
-            levels.append(child.cache())
-
-        walked = levels[0]
-        for lv in levels[1:]:
-            walked = walked.unionByName(lv)
-        # dense depth-first order without a single-partition window
-        ranked = self._rank(walked)
-        self._levels = levels  # unpersisted via unpersist()
-        return ranked
-
-    # -- stage 1c: path-doubling walk (O(log depth) rounds) --------------
+    # -- stage 1b: path-doubling walk (O(log depth) rounds) --------------
     def _walk_doubling(self) -> DataFrame:
-        """Same output as _walk()/_walk_cte() in O(log depth) self-joins
+        """Same output as :meth:`_walk_local` in O(log depth) self-joins
         (pointer jumping): each round concatenates a node's known path
         segment with its 2^i-th ancestor's segment and squares the jump
         pointer. A depth-1000 hierarchy needs 10 rounds instead of 1000
@@ -890,8 +613,7 @@ class HierarchyDimension:
 
         State per node: seg = array<struct> covering the 2^i nodes ending
         at the node; jump = the ancestor just above seg (null once seg
-        reaches the root). Total data volume matches the closure size —
-        identical asymptotics to the level walk, fewer rounds.
+        reaches the root). Total data volume matches the closure size.
         """
         nodes = self.nodes
         sort_key = F.col(self.sort_key_col)
@@ -908,7 +630,6 @@ class HierarchyDimension:
             F.array(sort_key).alias("_sort_seg"),
             F.col("parent_node_id").alias("_jump"),
         ).localCheckpoint()
-        self._levels = []
         rounds = max(1, (self.max_depth - 1).bit_length())
         for _ in range(rounds + 1):
             if state.filter(F.col("_jump").isNotNull()).isEmpty():
@@ -943,7 +664,7 @@ class HierarchyDimension:
             # jumps still pending after ceil(log2 max_depth)+1 rounds:
             # either members of a detached cycle (their segment wraps, so
             # node_ids repeat once it outgrows the cycle length — dropped
-            # silently here, exactly like the level walks never visit
+            # silently here, exactly like the local walk never visits
             # them; the materialized reach-check is the uniform raise
             # point for cycles) or genuinely deeper nodes (raise: a
             # silent drop would truncate a legitimate tree).
@@ -961,13 +682,13 @@ class HierarchyDimension:
             state = state.filter(F.col("_jump").isNull())
         # nodes with a parent missing from the table (orphans) never
         # terminate at a root: their first seg element is not a root.
-        # The level walks drop them; do the same here.
+        # The local walk drops them; do the same here.
         done = state.filter(
             F.element_at("_seg", 1).getField("is_root")
         )
         # max_depth is a semantic contract, not just a rounds budget: the
         # rounds bound has slack (2^(rounds+1) >= 2*max_depth), so a tree
-        # the level walks would reject could complete here — enforce it
+        # the local walk would reject could complete here — enforce it
         if not done.filter(F.size("_seg") > self.max_depth).isEmpty():
             raise ValueError(
                 f"hierarchy deeper than max_depth={self.max_depth} "
@@ -1009,7 +730,7 @@ class HierarchyDimension:
             # 1-based like DuckDB list_extract; try_ variant for NULL
             # (not error) past the path end under Spark 4 ANSI mode
             if self._compact is not None:
-                # compact-path fast branch (r14): one broadcast struct
+                # compact-path fast branch: one broadcast struct
                 # fetch per flattened level — past the path end the
                 # inner try_element_at yields a NULL index, which the
                 # outer lookup must propagate as NULL. try_ on the
@@ -1060,7 +781,7 @@ class HierarchyDimension:
         filled by a broadcast self-join on ancestor node_id.
         """
         if self._compact is not None:
-            # compact-path fast branch (r14): explode the INT ancestor
+            # compact-path fast branch: explode the INT ancestor
             # indices and fetch each ancestor's attribute struct once
             # from the broadcast row — never materializing the per-node
             # struct-path array the view would rebuild just to explode
@@ -1574,5 +1295,5 @@ class HierarchyDimension:
         if self._nodes_base is not None:
             self._nodes_base.unpersist()
             self._nodes_base = None
-        for lv in getattr(self, "_levels", ()):
+        for lv in self._levels:
             lv.unpersist()

@@ -663,11 +663,11 @@ def _chain_dim(spark: SparkSession, sf_dir: str) -> HierarchyDimension:
             sort_key_col="node_natural_key",
             flatten_levels=2,
             max_depth=512,
-            # auto: 256 nodes -> the driver-local walk. The O(log depth)
-            # doubling walk this query originally pinned stays the auto
-            # choice above _LOCAL_WALK_LIMIT nodes and is agreement-tested
-            # on this same chain shape (tests/test_hierarchy_edges.py);
-            # pinning it here would bench 9 rounds of pure job-scheduling
+            # 256 nodes -> the driver-local walk. The O(log depth)
+            # doubling walk this query originally pinned is the walk
+            # above _LOCAL_WALK_LIMIT nodes and is agreement-tested
+            # against the local walk (tests/test_hierarchy_edges.py);
+            # forcing it here would bench 9 rounds of pure job-scheduling
             # overhead (~23s) on a fixture the engine walks in ~1s.
             compute_sort_order=False,  # pure rollup: skip ranking passes
         )

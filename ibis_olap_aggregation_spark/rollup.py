@@ -6,20 +6,29 @@ DESCENDANT's natural key, then group by ANCESTOR — every node of the
 hierarchy gets correctly rolled-up measures, including non-additive
 COUNT(DISTINCT), with zero recursion at query time.
 
-Spark plan shape: Parquet scan (filters/columns pushed down) ->
-broadcast hash join (closure is dim-sized) -> partial hash agg ->
-shuffle on ``ancestor_node_id`` ONLY -> final hash agg -> broadcast
-join of the node-attribute columns onto the per-node result ->
-optional sort. Aggregating on the compact id and attaching the wide
-string attributes (node_name, level_name, ...) AFTER the aggregate
-matters at scale twice over: the broadcast side of the fact join
-carries two columns instead of six, and the shuffle rows carry an
-id instead of repeating every display string (measured 8.1s -> ~3s
-for the sf0.1 part rollup's sums on local[32]). The closure is
-broadcast by default; for hierarchies too large to broadcast, pass
-``broadcast_dim=False`` (every dim attach becomes a sort-merge join —
-plan-pinned broadcast-free) or ``"auto"`` (row-count probe against
-CLOSURE_BROADCAST_ROW_CAP picks the regime).
+Every public function but ``merge_rollup_partials`` is a thin wrapper
+over ONE pipeline, parametrised by the kind of measure:
+
+1. resolve the closure side once — a slim (descendant key,
+   ``ancestor_node_id``) select and its join regime;
+2. run one leaf-grain branch per measure kind — generic aggregate
+   Columns, additive exact-decimal partials, exact distinct (leaf key,
+   value) pairs, or HLL sketches — each joined to the closure and
+   aggregated on ``ancestor_node_id``;
+3. merge the branches on ``ancestor_node_id``;
+4. decorate: attach the node attributes (the closure's ``net_level = 0``
+   rows), cast exact sums to the presentation double where asked, and
+   sort by display order where asked.
+
+Aggregating on the compact id and attaching the wide string attributes
+(node_name, level_name, ...) AFTER the aggregate matters at scale twice
+over: the broadcast side of the fact join carries two columns instead
+of six, and the shuffle rows carry an id instead of repeating every
+display string (measured 8.1s -> ~3s for the sf0.1 part rollup's sums
+on local[32]). The closure is broadcast by default; for hierarchies too
+large to broadcast, pass ``broadcast_dim=False`` (every dim attach
+becomes a sort-merge join — plan-pinned broadcast-free) or ``"auto"``
+(row-count probe against CLOSURE_BROADCAST_ROW_CAP picks the regime).
 """
 
 from __future__ import annotations
@@ -79,6 +88,115 @@ def _dim_side(df: DataFrame, bcast: bool) -> DataFrame:
     return F.broadcast(df) if bcast else df.hint("merge")
 
 
+def _per_node(
+    facts: DataFrame,
+    aggregation_dim: DataFrame,
+    fact_key_col: str,
+    descendant_key_col: str,
+    broadcast_dim: bool | str,
+    *,
+    measures: Sequence[Column] = (),
+    sum_cols: Sequence[tuple[str, str]] = (),
+    count_alias: str | None = None,
+    distinct_cols: Sequence[tuple[str, str]] = (),
+    sketch: tuple[str, int, str] | None = None,
+) -> tuple[DataFrame, bool]:
+    """Steps 1-3 of the pipeline: one row per ``ancestor_node_id``, and
+    the resolved broadcast regime. Additive partials stay exact
+    (decimal(38,2) sums, bigint count); ``sketch`` is (column, lgk,
+    alias). Branch merges follow the closure's regime, so the
+    non-broadcast plan has no broadcast anywhere."""
+    if _ID not in aggregation_dim.columns:
+        raise ValueError(
+            f"rollups require the closure's {_ID} column (the compact id "
+            "every rollup aggregates on)"
+        )
+    if not (measures or sum_cols or count_alias or distinct_cols or sketch):
+        raise ValueError("no measures declared")
+    dim_slim = aggregation_dim.select(descendant_key_col, _ID)
+    bcast = _resolve_broadcast(dim_slim, broadcast_dim)
+    dim_slim = _dim_side(dim_slim, bcast)
+
+    def expand(leaf: DataFrame, *aggs: Column) -> DataFrame:
+        return (
+            leaf.join(dim_slim, leaf[fact_key_col] == dim_slim[descendant_key_col])
+            .groupBy(_ID)
+            .agg(*aggs)
+        )
+
+    branches: list[DataFrame] = []
+    if measures:
+        branches.append(expand(facts, *measures))
+    if sum_cols or count_alias:
+        partial = [F.sum(F.col(c).cast("decimal(18,2)")).alias(f"_p_{a}") for c, a in sum_cols]
+        rolled = [F.sum(f"_p_{a}").cast("decimal(38,2)").alias(a) for _, a in sum_cols]
+        if count_alias:
+            partial.append(F.count(F.lit(1)).alias("_p_n"))
+            rolled.append(F.sum("_p_n").cast("bigint").alias(count_alias))
+        branches.append(expand(facts.groupBy(fact_key_col).agg(*partial), *rolled))
+    for c, a in distinct_cols:
+        pair_cols = [fact_key_col] if c == fact_key_col else [fact_key_col, c]
+        branches.append(
+            expand(facts.select(*pair_cols).distinct(), F.countDistinct(c).alias(a))
+        )
+    if sketch:
+        c, lgk, a = sketch
+        leaf = facts.groupBy(fact_key_col).agg(
+            F.expr(f"hll_sketch_agg({c}, {lgk})").alias("_sk")
+        )
+        branches.append(
+            expand(leaf, F.expr("hll_sketch_estimate(hll_union_agg(_sk))").alias(a))
+        )
+    per_node = branches[0]
+    for b in branches[1:]:
+        per_node = per_node.join(b if bcast else b.hint("merge"), _ID)
+    return per_node, bcast
+
+
+def _decorate(
+    per_node: DataFrame,
+    aggregation_dim: DataFrame,
+    group_keys: Sequence[str],
+    broadcast_dim: bool | str,
+    *,
+    double_cols: Sequence[str] = (),
+    sort: bool = True,
+    keep_node_id: bool = False,
+) -> DataFrame:
+    """Step 4 of the pipeline: attach the ``group_keys`` present in the
+    dim, one attribute row per node (the self-pairs; distinct when
+    net_level is absent). ``broadcast_dim`` is the attach's regime — a
+    resolved bool, or "auto" to probe it. ``keep_node_id`` leads with
+    the compact id for consumers that self-join the rolled table."""
+    dim = aggregation_dim
+    keys = [k for k in group_keys if k in dim.columns]
+    attr_cols = [_ID, *[k for k in keys if k != _ID]]
+    if "net_level" in dim.columns:
+        attrs = dim.filter(F.col("net_level") == 0).select(*attr_cols)
+    else:
+        attrs = dim.select(*attr_cols).distinct()
+    lead = [_ID] if keep_node_id and _ID not in keys else []
+    out = per_node.join(_dim_side(attrs, _resolve_broadcast(attrs, broadcast_dim)), _ID).select(
+        *lead,
+        *keys,
+        *[
+            F.col(c).cast("double").alias(c) if c in double_cols else F.col(c)
+            for c in per_node.columns
+            if c != _ID
+        ],
+    )
+    if sort and "ancestor_node_sort_order" in keys:
+        # the result is dim-sized (one row per hierarchy node), so a
+        # single-partition sort is right at any fact scale — and unlike
+        # a global orderBy it needs no range-sampling pass, which would
+        # execute the whole aggregation subplan a second time (measured
+        # 14.3s -> 9.8s on the sf0.1 part rollup). repartition(1), not
+        # coalesce(1): the shuffle boundary keeps the aggregation
+        # parallel upstream.
+        out = out.repartition(1).sortWithinPartitions("ancestor_node_sort_order")
+    return out
+
+
 def hierarchical_rollup(
     facts: DataFrame,
     aggregation_dim: DataFrame,
@@ -97,51 +215,14 @@ def hierarchical_rollup(
        F.countDistinct("customer_id").alias("distinct_customer_count")]``.
 
     Output columns: ``group_keys`` (those present in the dim) in the
-    given order, then the measures.
+    given order, then the measures. Raises ValueError for a closure
+    without ``ancestor_node_id``.
     """
-    dim = aggregation_dim
-    keys = [k for k in group_keys if k in dim.columns]
-    if _ID not in dim.columns or _ID in keys:
-        # no compact id to pivot on (custom closure) — single wide groupBy
-        dim_slim = dim.select(descendant_key_col, *keys)
-        bcast = _resolve_broadcast(dim_slim, broadcast_dim)
-        dim_slim = _dim_side(dim_slim, bcast)
-        joined = facts.join(
-            dim_slim, facts[fact_key_col] == dim_slim[descendant_key_col], "inner"
-        )
-        out = joined.groupBy(*keys).agg(*measures)
-    else:
-        # aggregate on the id, decorate after: the expanded fact only
-        # ever carries (fact columns + ancestor_node_id)
-        dim_slim = dim.select(descendant_key_col, _ID)
-        bcast = _resolve_broadcast(dim_slim, broadcast_dim)
-        dim_slim = _dim_side(dim_slim, bcast)
-        joined = facts.join(
-            dim_slim, facts[fact_key_col] == dim_slim[descendant_key_col], "inner"
-        )
-        per_node = joined.groupBy(_ID).agg(*measures)
-        # one attribute row per node: the closure's self-pairs are unique
-        # per ancestor; fall back to distinct when net_level is absent.
-        # attrs is node-sized (smaller than the closure by the depth
-        # factor) but follows the same regime: past broadcast reach for
-        # the closure usually means a 10M-node attr table too.
-        if "net_level" in dim.columns:
-            attrs = dim.filter(F.col("net_level") == 0).select(_ID, *keys)
-        else:
-            attrs = dim.select(_ID, *keys).distinct()
-        out = per_node.join(_dim_side(attrs, bcast), _ID).select(
-            *keys, *[c for c in per_node.columns if c != _ID]
-        )
-    if sort and "ancestor_node_sort_order" in keys:
-        # the result is dim-sized (one row per hierarchy node), so a
-        # single-partition sort is right at any fact scale — and unlike
-        # a global orderBy it needs no range-sampling pass, which would
-        # execute the whole aggregation subplan a second time (measured
-        # 14.3s -> 9.8s on the sf0.1 part rollup). repartition(1), not
-        # coalesce(1): the shuffle boundary keeps the aggregation
-        # parallel upstream.
-        out = out.repartition(1).sortWithinPartitions("ancestor_node_sort_order")
-    return out
+    per_node, bcast = _per_node(
+        facts, aggregation_dim, fact_key_col, descendant_key_col, broadcast_dim,
+        measures=measures,
+    )
+    return _decorate(per_node, aggregation_dim, group_keys, bcast, sort=sort)
 
 
 def hierarchical_rollup_additive(
@@ -184,71 +265,14 @@ def hierarchical_rollup_additive(
     distinct. Measures referencing multiple columns or non-decomposable
     aggregates stay on :func:`hierarchical_rollup`.
     """
-    dim = aggregation_dim
-    keys = [k for k in group_keys if k in dim.columns]
-    if _ID not in dim.columns or _ID in keys:
-        raise ValueError(
-            "hierarchical_rollup_additive requires the closure's "
-            f"{_ID} column — use hierarchical_rollup for custom closures"
-        )
-    dim_slim = dim.select(descendant_key_col, _ID)
-    bcast = _resolve_broadcast(dim_slim, broadcast_dim)
-    dim_slim = _dim_side(dim_slim, bcast)
-
-    branches: list[DataFrame] = []
-    if sum_cols or count_alias:
-        partial_aggs = [
-            F.sum(F.col(c).cast("decimal(18,2)")).alias(f"_p_{a}")
-            for c, a in sum_cols
-        ]
-        if count_alias:
-            partial_aggs.append(F.count(F.lit(1)).alias("_p_n"))
-        leaf = facts.groupBy(fact_key_col).agg(*partial_aggs)
-        rolled = [
-            F.sum(f"_p_{a}").cast("double").alias(a) for _, a in sum_cols
-        ]
-        if count_alias:
-            rolled.append(F.sum("_p_n").alias(count_alias))
-        branches.append(
-            leaf.join(
-                dim_slim, leaf[fact_key_col] == dim_slim[descendant_key_col]
-            )
-            .groupBy(_ID)
-            .agg(*rolled)
-        )
-    for c, a in distinct_cols:
-        pair_cols = [fact_key_col] if c == fact_key_col else [fact_key_col, c]
-        pairs = facts.select(*pair_cols).distinct()
-        branches.append(
-            pairs.join(
-                dim_slim, pairs[fact_key_col] == dim_slim[descendant_key_col]
-            )
-            .groupBy(_ID)
-            .agg(F.countDistinct(c).alias(a))
-        )
-    if not branches:
-        raise ValueError("no measures declared")
-    per_node = branches[0]
-    for b in branches[1:]:
-        # branch merges are node-sized x node-sized; they follow the
-        # closure's regime so the non-broadcast plan has no broadcast
-        # anywhere (every side is dim-derived)
-        per_node = per_node.join(b if bcast else b.hint("merge"), _ID)
-
-    if "net_level" in dim.columns:
-        attrs = dim.filter(F.col("net_level") == 0).select(_ID, *keys)
-    else:
-        attrs = dim.select(_ID, *keys).distinct()
-    # keep_node_id=True retains the compact node id for consumers that
-    # self-join the rolled table (share-of-parent, drill paths)
-    out = per_node.join(_dim_side(attrs, bcast), _ID).select(
-        *([_ID] if keep_node_id else []),
-        *keys,
-        *[c for c in per_node.columns if c != _ID],
+    per_node, bcast = _per_node(
+        facts, aggregation_dim, fact_key_col, descendant_key_col, broadcast_dim,
+        sum_cols=sum_cols, count_alias=count_alias, distinct_cols=distinct_cols,
     )
-    if sort and "ancestor_node_sort_order" in keys:
-        out = out.repartition(1).sortWithinPartitions("ancestor_node_sort_order")
-    return out
+    return _decorate(
+        per_node, aggregation_dim, group_keys, bcast,
+        double_cols=[a for _, a in sum_cols], sort=sort, keep_node_id=keep_node_id,
+    )
 
 
 def hierarchical_rollup_sketch(
@@ -277,25 +301,11 @@ def hierarchical_rollup_sketch(
     the pre-aggregated leaf sketches can be stored and re-rolled to any
     grain without touching facts again. Estimates carry the standard
     HLL error (~1.04/sqrt(2^lgk)); exact paths remain the default."""
-    dim = aggregation_dim
-    keys = [k for k in group_keys if k in dim.columns]
-    leaf = facts.groupBy(fact_key_col).agg(
-        F.expr(f"hll_sketch_agg({distinct_col}, {lgk})").alias("_sk")
+    per_node, _ = _per_node(
+        facts, aggregation_dim, fact_key_col, descendant_key_col, "auto",
+        sketch=(distinct_col, lgk, out),
     )
-    dim_slim = dim.select(descendant_key_col, _ID)
-    dim_slim = _dim_side(dim_slim, _resolve_broadcast(dim_slim, "auto"))
-    per_node = (
-        leaf.join(dim_slim, leaf[fact_key_col] == dim_slim[descendant_key_col])
-        .groupBy(_ID)
-        .agg(F.expr("hll_union_agg(_sk)").alias("_u"))
-    )
-    if "net_level" in dim.columns:
-        attrs = dim.filter(F.col("net_level") == 0).select(_ID, *keys)
-    else:
-        attrs = dim.select(_ID, *keys).distinct()
-    return per_node.join(_dim_side(attrs, _resolve_broadcast(attrs, "auto")), _ID).select(
-        *keys, F.expr("hll_sketch_estimate(_u)").alias(out)
-    )
+    return _decorate(per_node, aggregation_dim, group_keys, "auto", sort=False)
 
 
 # ---------------------------------------------------------------------------
@@ -342,26 +352,10 @@ def hierarchical_rollup_partials(
     contributing fact count. Same leaf-grain pre-aggregation as
     hierarchical_rollup_additive: the closure join and shuffle see one
     row per leaf key, not per fact."""
-    if not sum_cols and not count_alias:
-        raise ValueError("no measures declared")
-    dim_slim = aggregation_dim.select(descendant_key_col, _ID)
-    dim_slim = _dim_side(dim_slim, _resolve_broadcast(dim_slim, broadcast_dim))
-    partial_aggs = [
-        F.sum(F.col(c).cast("decimal(18,2)")).alias(a) for c, a in sum_cols
-    ]
-    if count_alias:
-        partial_aggs.append(F.count(F.lit(1)).alias(count_alias))
-    leaf = facts.groupBy(fact_key_col).agg(*partial_aggs)
-    rolled = [
-        F.sum(a).cast("decimal(38,2)").alias(a) for _, a in sum_cols
-    ]
-    if count_alias:
-        rolled.append(F.sum(count_alias).cast("bigint").alias(count_alias))
-    return (
-        leaf.join(dim_slim, leaf[fact_key_col] == dim_slim[descendant_key_col])
-        .groupBy(_ID)
-        .agg(*rolled)
-    )
+    return _per_node(
+        facts, aggregation_dim, fact_key_col, descendant_key_col, broadcast_dim,
+        sum_cols=sum_cols, count_alias=count_alias,
+    )[0]
 
 
 def merge_rollup_partials(
@@ -403,20 +397,6 @@ def finalize_rollup_partials(
     hierarchy's display order. Keeping this a separate step is the
     point: the STORED partials stay exact and mergeable; only the
     query-time view pays the lossy cast."""
-    dim = aggregation_dim
-    keys = [k for k in group_keys if k in dim.columns]
-    if "net_level" in dim.columns:
-        attrs = dim.filter(F.col("net_level") == 0).select(_ID, *keys)
-    else:
-        attrs = dim.select(_ID, *keys).distinct()
-    out = merged.join(_dim_side(attrs, _resolve_broadcast(attrs, "auto")), _ID).select(
-        *keys,
-        *[
-            (F.col(c).cast("double").alias(c) if c in sum_aliases else F.col(c))
-            for c in merged.columns
-            if c != _ID
-        ],
+    return _decorate(
+        merged, aggregation_dim, group_keys, "auto", double_cols=sum_aliases, sort=sort
     )
-    if sort and "ancestor_node_sort_order" in keys:
-        out = out.repartition(1).sortWithinPartitions("ancestor_node_sort_order")
-    return out

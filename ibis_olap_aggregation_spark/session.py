@@ -29,14 +29,45 @@ TABLES = (
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+# cgroup v2 and v1 memory limits; "max" or an unreadable file means unset
+_CGROUP_MEM_LIMITS = (
+    "/sys/fs/cgroup/memory.max",
+    "/sys/fs/cgroup/memory/memory.limit_in_bytes",
+)
+
+
+def physical_memory_bytes() -> int:
+    """Memory this process may use: ``MemTotal`` from /proc/meminfo,
+    lowered to the cgroup limit when one is set (v1 reports "no limit"
+    as a huge number, which the min discards)."""
+    with open("/proc/meminfo") as f:
+        total = next(int(line.split()[1]) * 1024 for line in f if line.startswith("MemTotal:"))
+    for path in _CGROUP_MEM_LIMITS:
+        try:
+            with open(path) as f:
+                total = min(total, int(f.read().strip()))
+        except (OSError, ValueError):
+            continue
+    return total
+
+
+def default_driver_memory() -> str:
+    """Local driver heap: a quarter of physical memory, in megabytes. The
+    JVM adds off-heap memory and the Python workers their own on top, so
+    a heap near physical memory gets the JVM killed mid-run."""
+    return f"{physical_memory_bytes() // 4 // 2**20}m"
+
 
 def get_spark(app_name: str = "ibis_olap_aggregation_spark") -> SparkSession:
     """Build (or reuse) a SparkSession tuned for this engine.
 
     On a real cluster the master/memory settings come from spark-submit;
-    everything set here is cluster-safe (AQE, Arrow, timezone).
+    everything set here is cluster-safe (AQE, Arrow, timezone). Locally
+    the width is the CPUs this process may run on and the driver heap
+    is :func:`default_driver_memory`; ``SPARK_GRAFT_CPUS`` and
+    ``SPARK_GRAFT_DRIVER_MEM`` override them.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
     builder = (
         SparkSession.builder.appName(app_name)
         .config("spark.sql.shuffle.partitions", cpus)
@@ -49,7 +80,8 @@ def get_spark(app_name: str = "ibis_olap_aggregation_spark") -> SparkSession:
     )
     if not os.environ.get("SPARK_MASTER"):  # local dev/test default
         builder = builder.master(f"local[{cpus}]").config(
-            "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g")
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
         )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

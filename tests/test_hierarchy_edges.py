@@ -23,6 +23,16 @@ def _dim(spark, rows, **kw):
     )
 
 
+@pytest.fixture(params=["local", "doubling"])
+def regime(request, monkeypatch):
+    """Run a test under both walks: the driver-local walk (the default
+    for dim-sized tables) and the doubling walk, forced by a zero node
+    limit."""
+    if request.param == "doubling":
+        monkeypatch.setattr(HierarchyDimension, "_LOCAL_WALK_LIMIT", 0)
+    return request.param
+
+
 def test_no_root_yields_empty_dims(spark):
     """All nodes have parents (broken FK / cycle-free but rootless):
     the walk anchors on is_root and finds nothing — both dims empty,
@@ -73,6 +83,21 @@ def test_facts_without_leaf_dropped_by_inner_join(spark):
     assert got == {"Root": 1, "Child": 1}
 
 
+def test_rollup_requires_ancestor_node_id(spark):
+    """Every rollup aggregates on the compact ancestor id: a closure
+    without it is rejected up front, not rolled up some other way."""
+    d = _dim(spark, [("r", 1, "Root", "Top", None)])
+    facts = spark.createDataFrame([(1, 5.0)], "k bigint, v double")
+    with pytest.raises(ValueError, match="ancestor_node_id"):
+        hierarchical_rollup(
+            facts,
+            d.aggregation_dim.drop("ancestor_node_id"),
+            "k",
+            [F.count(F.lit(1)).alias("n")],
+            group_keys=("ancestor_node_name",),
+        )
+
+
 def test_single_node_hierarchy(spark):
     d = _dim(spark, [("r", 1, "Root", "Top", None)])
     rep = d.reporting_dim.collect()
@@ -120,17 +145,14 @@ _CYCLE_ROWS = [
 ]
 
 
-@pytest.mark.parametrize("strategy", ["cte", "iterative", "doubling", "local"])
-def test_cycle_detected_when_materialized(spark, strategy):
-    """A cycle in parent_node_id is data corruption: every strategy
-    raises an explicit cycle error on a materialized build (the
-    reached-count check classifies unreached nodes; doubling also
-    detects the wrapped segment directly)."""
+def test_cycle_detected_when_materialized(spark, regime):
+    """A cycle in parent_node_id is data corruption: both walks raise an
+    explicit cycle error on a materialized build (the reached-count
+    check classifies unreached nodes)."""
     with pytest.raises(ValueError, match="cycle detected"):
         HierarchyDimension(
             spark.createDataFrame(_CYCLE_ROWS, SCHEMA),
             sort_key_col="node_natural_key",
-            strategy=strategy,
             materialize=True,
         )
 
@@ -153,54 +175,83 @@ def test_orphans_still_silent_when_materialized(spark):
     d.unpersist()
 
 
-def test_deep_tree_raises_depth_not_cycle(spark):
+def test_deep_tree_raises_depth_not_cycle(spark, monkeypatch):
     """A legit depth-5 chain under max_depth=3 must raise the DEPTH
-    error (and never claim a cycle)."""
+    error (and never claim a cycle) under both walks."""
     rows = [("n0", 0, "N0", "L", None)] + [
         (f"n{i}", i, f"N{i}", "L", f"n{i-1}") for i in range(1, 6)
     ]
-    for strategy in ("cte", "iterative", "doubling", "local"):
+    for limit in (HierarchyDimension._LOCAL_WALK_LIMIT, 0):  # local, doubling
+        monkeypatch.setattr(HierarchyDimension, "_LOCAL_WALK_LIMIT", limit)
         with pytest.raises(ValueError, match="deeper than max_depth"):
             HierarchyDimension(
                 spark.createDataFrame(rows, SCHEMA),
                 sort_key_col="node_natural_key",
-                strategy=strategy,
                 max_depth=3,
                 materialize=True,
             )
 
 
-def test_cte_confs_restored(spark):
-    """_walk_cte must not leak session-global recursion limits."""
-    keys = ("spark.sql.cteRecursionLevelLimit", "spark.sql.cteRecursionRowLimit")
-    before = {k: spark.conf.get(k, None) for k in keys}
-    d = _dim(
-        spark,
-        [("r", 1, "Root", "Top", None), ("a", 2, "A", "Leaf", "r")],
-        sort_key_col="node_natural_key",
-        strategy="cte",
-        max_depth=7,
-    )
-    d.aggregation_dim.count()
-    after = {k: spark.conf.get(k, None) for k in keys}
-    assert before == after
-
-
-@pytest.mark.parametrize("strategy", ["cte", "iterative", "doubling", "local"])
-def test_strategies_agree(spark, strategy):
-    """The recursive-CTE and iterative walks produce identical dims."""
+def test_strategies_agree(spark, regime):
+    """Both walks produce the same dims, with or without materialize:
+    the walk is chosen by node count alone."""
     rows = [
         ("r", 1, "Root", "Top", None),
         ("a", 2, "A", "Mid", "r"),
         ("a1", 3, "A1", "Leaf", "a"),
         ("b", 4, "B", "Leaf", "r"),
     ]
-    d = _dim(spark, rows, sort_key_col="node_natural_key", strategy=strategy)
-    rep = sorted(
-        (r.node_id, r.level_number, r.node_sort_order)
-        for r in d.reporting_dim.collect()
+    for materialize in (False, True):
+        d = HierarchyDimension(
+            spark.createDataFrame(rows, SCHEMA),
+            sort_key_col="node_natural_key",
+            materialize=materialize,
+        )
+        assert (d._compact is not None) == (regime == "local")
+        rep = sorted(
+            (r.node_id, r.level_number, r.node_sort_order)
+            for r in d.reporting_dim.collect()
+        )
+        assert rep == [("a", 2, 2), ("a1", 3, 3), ("b", 2, 4), ("r", 1, 1)]
+        d.unpersist()
+
+
+def test_empty_node_table_yields_empty_dims(spark):
+    """A node table with no rows walks to two empty dims."""
+    d = HierarchyDimension(spark.createDataFrame([], SCHEMA))
+    assert d.reporting_dim.count() == 0
+    assert d.aggregation_dim.count() == 0
+    d.unpersist()
+
+
+def test_arrow_unsupported_attribute_takes_doubling_walk(spark):
+    """Arrow cannot carry an interval column, so the node table cannot
+    be fetched for the local walk: the build takes the doubling walk and
+    gives the same closure and sort order as the same nodes without the
+    column."""
+    rows = [
+        ("r", 1, "Root", "Top", None),
+        ("a", 2, "A", "Mid", "r"),
+        ("a1", 3, "A1", "Leaf", "a"),
+        ("b", 4, "B", "Leaf", "r"),
+    ]
+    plain = spark.createDataFrame(rows, SCHEMA)
+    with_interval = plain.withColumn(
+        "tenure", F.expr("make_interval(0, 0, 0, cast(node_natural_key as int))")
     )
-    assert rep == [("a", 2, 2), ("a1", 3, 3), ("b", 2, 4), ("r", 1, 1)]
+    got = HierarchyDimension(with_interval, sort_key_col="node_natural_key")
+    want = HierarchyDimension(plain, sort_key_col="node_natural_key")
+    assert got._compact is None and want._compact is not None
+
+    def order(d):
+        return sorted(
+            tuple(r) for r in d.reporting_dim.select("node_id", "node_sort_order").collect()
+        )
+
+    assert got.aggregation_dim.count() == want.aggregation_dim.count() == 8
+    assert order(got) == order(want)
+    got.unpersist()
+    want.unpersist()
 
 
 def test_misestimated_input_never_direct_fetched(spark, monkeypatch):
@@ -208,12 +259,13 @@ def test_misestimated_input_never_direct_fetched(spark, monkeypatch):
     size, so the stats-gated fast path would pull every exploded row to
     the driver before any bound applied. The gate must detect the unsafe
     estimate and take the count probe, which routes an over-limit node
-    table to the distributed walk without ever calling _fetch_local."""
+    table to the distributed walk without ever calling
+    _fetch_local_table."""
     fetches = []
-    real_fetch = HierarchyDimension._fetch_local
+    real_fetch = HierarchyDimension._fetch_local_table
     monkeypatch.setattr(
         HierarchyDimension,
-        "_fetch_local",
+        "_fetch_local_table",
         staticmethod(lambda df: fetches.append(1) or real_fetch(df)),
     )
     # 30 seed rows explode to 300k nodes (> _LOCAL_WALK_LIMIT) under a
@@ -241,7 +293,7 @@ def test_misestimated_input_never_direct_fetched(spark, monkeypatch):
         compute_sort_order=False,
     )
     assert not fetches, "mis-estimated input was fetched to the driver"
-    assert dim._local_rows is None  # distributed walk owns it
+    assert dim._compact is None  # the doubling walk ran
     # the walk is still correct: every node reaches the closure
     assert dim.aggregation_dim.filter("net_level = 0").count() == 30 * per
 

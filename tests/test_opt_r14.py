@@ -61,20 +61,19 @@ def _messy_nodes(spark):
     )
 
 
-def test_columnar_local_walk_matches_dict_walk(spark, monkeypatch):
-    """The Arrow-columnar local walk (r14: no per-row dicts) must emit
-    exactly the dict walk's rows — attributes, level numbers, dense DFS
-    sort order, struct paths, and _sort_path — on a forest exercising
-    null sort keys, orphans, multi-root ordering, and sibling ties."""
+def test_local_walk_matches_doubling_walk(spark, monkeypatch):
+    """The driver-local walk must emit exactly the doubling walk's rows
+    — attributes, level numbers, dense DFS sort order, struct paths,
+    and _sort_path — and the same closure, on a forest exercising null
+    sort keys, orphans, multi-root ordering, and sibling ties."""
     from ibis_olap_aggregation_spark.hierarchy import HierarchyDimension
 
     nodes = _messy_nodes(spark)
-    dim_col = HierarchyDimension(nodes, dimension_name="m", flatten_levels=3)
-    # force the dict path: table fetch unavailable
-    monkeypatch.setattr(
-        HierarchyDimension, "_fetch_local_table", staticmethod(lambda df: None)
-    )
-    dim_dict = HierarchyDimension(nodes, dimension_name="m", flatten_levels=3)
+    local = HierarchyDimension(nodes, dimension_name="m", flatten_levels=3)
+    # force the doubling walk: no node table is small enough to fetch
+    monkeypatch.setattr(HierarchyDimension, "_LOCAL_WALK_LIMIT", 0)
+    doubling = HierarchyDimension(nodes, dimension_name="m", flatten_levels=3)
+    assert local._compact is not None and doubling._compact is None
 
     def rows(d):
         out = d._walked.select(
@@ -84,23 +83,21 @@ def test_columnar_local_walk_matches_dict_walk(spark, monkeypatch):
         ).collect()
         return sorted(tuple(r) for r in out)
 
-    a, b = rows(dim_col), rows(dim_dict)
+    a, b = rows(local), rows(doubling)
     assert a == b
     # orphan dropped, other 9 nodes walked, dense 1-based DFS ranks
     assert len(a) == 9
     assert sorted(r[3] for r in a) == list(range(1, 10))
-    # downstream dims agree too (closure + reporting built from walked)
-    agg_a = sorted(
-        tuple(r) for r in dim_col.aggregation_dim.select(
-            "ancestor_node_id", "descendant_node_id", "net_level"
-        ).collect()
-    )
-    agg_b = sorted(
-        tuple(r) for r in dim_dict.aggregation_dim.select(
-            "ancestor_node_id", "descendant_node_id", "net_level"
-        ).collect()
-    )
-    assert agg_a == agg_b
+
+    def closure(d):
+        return sorted(
+            tuple(r) for r in d.aggregation_dim.select(
+                "ancestor_node_id", "descendant_node_id", "net_level",
+                "ancestor_node_sort_order", "descendant_node_sort_order",
+            ).collect()
+        )
+
+    assert closure(local) == closure(doubling)
 
 
 def test_map_side_ranker_matches_window_ranker(spark):

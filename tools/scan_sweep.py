@@ -41,6 +41,16 @@ TABLES = (
 )
 
 
+def _scanned_table(line: str) -> str | None:
+    """The table a parquet scan line reads: a path component that is
+    ``<table>`` or ``<table>.parquet``, or a catalog ``<table>[``. Whole
+    components only, so a ``partsupp`` scan never counts as ``part``."""
+    for t in TABLES:
+        if re.search(rf"/{t}(?:\.parquet)?(?=[/\],\s]|$)| {t}\[", line):
+            return t
+    return None
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("names", nargs="*")
@@ -81,7 +91,7 @@ def main() -> None:
             m = re.search(r"Scan parquet", ln)
             if not m:
                 continue
-            hit = next((t for t in TABLES if f"/{t}" in ln or f" {t}[" in ln), None)
+            hit = _scanned_table(ln)
             scans[hit or "?"] = scans.get(hit or "?", 0) + 1
         rows.append({
             "name": name,
