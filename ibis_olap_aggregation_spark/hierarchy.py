@@ -177,7 +177,6 @@ class HierarchyDimension:
         self._nodes_base = None
         self._n_nodes: int | None = None
         self._walked_local_count: int | None = None
-        self._levels: list[DataFrame] = []
         # compact-path artifacts of the local walk: the checkpointed
         # frame with integer ancestor-index paths and the single-row
         # broadcast attribute table. When set, the closure and reporting
@@ -593,9 +592,7 @@ class HierarchyDimension:
         """Dense depth-first order, or a NULL column when the consumer
         opted out of display ordering (compute_sort_order=False)."""
         if not self.compute_sort_order:
-            return walked.withColumn(
-                "node_sort_order", F.lit(None).cast("int")
-            ).drop("_x_never")
+            return walked.withColumn("node_sort_order", F.lit(None).cast("int"))
         # the node count (known when materialized) sizes the ranker's
         # range partitioning up front, sparing it its own count pass
         return global_row_number(
@@ -708,8 +705,6 @@ class HierarchyDimension:
             ).alias("node_json_path"),
             F.col("_sort_seg").alias("_sort_path"),
         )
-        walked = walked.cache()
-        self._levels.append(walked)
         return self._rank(walked)
 
     # -- stage 2: reporting dim -----------------------------------------
@@ -851,366 +846,120 @@ class HierarchyDimension:
         return [c for c in self._struct_cols if c != "parent_node_id"]
 
     # -- incremental maintenance -----------------------------------------
+    # append / delete / move edit the adjacency list and rebuild, as the
+    # reference does on any node change (ref :162,220): at dim size a
+    # local rebuild is cheaper than closure-delta joins, and it keeps
+    # is_leaf and the dense node_sort_order right by construction.
+    def _adjacency(self) -> DataFrame:
+        """The node table this dim walked, read back from the reporting
+        dim (so the orphans the build dropped stay dropped)."""
+        derived = ("node_id", "parent_node_id", "is_root", "is_leaf")
+        attrs = [c for c in self.nodes.columns if c not in derived]
+        return self.reporting_dim.select("node_id", *attrs, "parent_node_id")
+
+    def _closure_ids(self) -> DataFrame:
+        """Every node id in the closure (its self-pair rows), as ``_id``."""
+        return self.aggregation_dim.filter("net_level = 0").select(
+            F.col("descendant_node_id").alias("_id")
+        )
+
+    def _rebuilt(self, adjacency: DataFrame) -> DataFrame:
+        """Closure of a fresh, uncached build of ``adjacency`` with this
+        dim's settings."""
+        return HierarchyDimension(
+            adjacency,
+            dimension_name=self.dimension_name,
+            sort_key_col=self.sort_key_col,
+            max_depth=self.max_depth,
+            flatten_levels=self.flatten_levels,
+            materialize=False,
+            compute_sort_order=self.compute_sort_order,
+        ).aggregation_dim
+
     def extend_closure_with_leaves(self, new_nodes: DataFrame) -> DataFrame:
-        """Closure rows for NEW LEAF nodes without re-walking the tree:
-        a new leaf's ancestor set = its parent's ancestor set + itself,
-        so the delta is one broadcast join of the new rows against the
-        existing closure at the parent + the new self-pairs. Returns the
-        extended aggregation dim (existing ∪ delta).
+        """Closure after appending NEW LEAF nodes (new customer, product,
+        file). ``new_nodes`` carries this dim's node columns; its rows are
+        added to the adjacency list and the dim is rebuilt.
 
-        Scope: leaf APPENDS only (the overwhelmingly common dimension
-        change — new customer/product/file arrives). Moves or interior
-        inserts change descendants' paths and sort orders → full rebuild.
-        node_sort_order for appended leaves is NULL (a display concern;
-        rollup correctness never depends on it) until the next rebuild.
-
-        Flag maintenance: parents receiving their first child stop being
-        leaves, so their pre-existing closure rows get is_leaf flipped to
-        false (both as ancestor and as descendant). New nodes whose
-        parent is absent from the existing closure raise (an interior /
-        orphan insert is outside this method's contract, and silently
-        dropping it would corrupt the rollup).
+        Raises when a new node's parent is not in the closure (interior
+        and orphan inserts are outside this method's contract, and the
+        walk would drop them silently), and when a new ``node_id`` is
+        already in the closure or repeated in the batch.
         """
-        prepared = prepare_nodes(new_nodes)
-        attr = self._attr_out_cols()
-        anc_cols = [f"ancestor_{c}" for c in attr] + [
-            "ancestor_level_number",
-            "ancestor_node_sort_order",
-        ]
-        new = prepared.select(
-            *[F.col(c).alias(f"new_{c}") for c in prepared.columns]
-        )
-        # guard: every new node's parent must already be in the closure
-        known = self.aggregation_dim.filter("net_level = 0").select(
-            F.col("descendant_node_id").alias("_k")
-        )
-        missing = [
-            r["new_node_id"]
-            for r in new.join(
-                # known = EVERY node id (dim-sized): bounded probe, not
-                # an unconditional broadcast (10M-node dims)
-                dim_side(known), new["new_parent_node_id"] == known["_k"], "left_anti"
-            )
-            .select("new_node_id")
-            .limit(5)
-            .collect()
-        ]
-        if missing:
-            raise ValueError(
-                "extend_closure_with_leaves: parent not in existing closure "
-                f"for new nodes {missing} (leaf appends only — rebuild for "
-                "interior inserts)"
-            )
-        # parents gaining their first child are no longer leaves: flip
-        # is_leaf on their existing rows (tiny parent set -> broadcast)
-        base = self.aggregation_dim
-        if "is_leaf" in attr:
-            new_parents = prepared.select(
-                F.col("parent_node_id").alias("_np")
-            ).distinct()
-            for side in ("ancestor", "descendant"):
-                hit = new_parents.select(
-                    F.col("_np").alias(f"_hit_{side}")
-                ).withColumn(f"_flip_{side}", F.lit(True))
-                base = (
-                    base.join(
-                        F.broadcast(hit),
-                        base[f"{side}_node_id"] == hit[f"_hit_{side}"],
-                        "left",
-                    )
-                    .withColumn(
-                        f"{side}_is_leaf",
-                        F.when(F.col(f"_flip_{side}"), F.lit(False)).otherwise(
-                            F.col(f"{side}_is_leaf")
-                        ),
-                    )
-                    .drop(f"_hit_{side}", f"_flip_{side}")
-                )
-        # ancestors of the parent (including the parent itself = self-pair
-        # rows of the parent) -> become ancestors of the new leaf
-        parent_anc = base.select(
-            *anc_cols, F.col("descendant_node_id").alias("_parent_id"),
-            F.col("descendant_level_number").alias("_parent_level"),
-        )
-        inherited = new.join(
-            # parent_anc is CLOSURE-sized (ancestor rows of every node):
-            # bounded probe — sort-merge past the cap
-            dim_side(parent_anc),
-            F.col("new_parent_node_id") == F.col("_parent_id"),
-        ).select(
-            *anc_cols,
-            *[F.col(f"new_{c}").alias(f"descendant_{c}") for c in attr],
-            (F.col("_parent_level") + 1).alias("descendant_level_number"),
-            F.lit(None).cast("int").alias("descendant_node_sort_order"),
-            (F.col("_parent_level") + 1 - F.col("ancestor_level_number")).alias(
-                "net_level"
-            ),
-        )
-        # depth of the new leaf = parent's depth + 1 (distinct per parent)
-        parent_depth = base.filter("net_level = 0").select(
-            F.col("descendant_node_id").alias("_parent_id"),
-            F.col("descendant_level_number").alias("_parent_level"),
-        )
-        self_pairs = new.join(
-            # node-count-sized (one depth row per node): bounded probe
-            dim_side(parent_depth),
-            F.col("new_parent_node_id") == F.col("_parent_id"),
-        ).select(
-            *[F.col(f"new_{c}").alias(f"ancestor_{c}") for c in attr],
-            (F.col("_parent_level") + 1).alias("ancestor_level_number"),
-            F.lit(None).cast("int").alias("ancestor_node_sort_order"),
-            *[F.col(f"new_{c}").alias(f"descendant_{c}") for c in attr],
-            (F.col("_parent_level") + 1).alias("descendant_level_number"),
-            F.lit(None).cast("int").alias("descendant_node_sort_order"),
-            F.lit(0).alias("net_level"),
-        )
-        return base.unionByName(inherited).unionByName(self_pairs)
+        ids = self._closure_ids()
+        new = new_nodes.select("node_id", "parent_node_id")
+        orphans = new.join(ids, new["parent_node_id"] == ids["_id"], "left_anti")
+        repeated = new.join(ids, new["node_id"] == ids["_id"], "left_semi").select(
+            "node_id"
+        ).union(new.groupBy("node_id").count().filter("count > 1").select("node_id"))
+        for bad, msg in (
+            (orphans, "parent not in existing closure for new nodes {} (leaf "
+             "appends only — rebuild for interior inserts)"),
+            (repeated, "node ids {} already in the closure or repeated in the batch"),
+        ):
+            found = [r[0] for r in bad.select("node_id").distinct().limit(5).collect()]
+            if found:
+                raise ValueError("extend_closure_with_leaves: " + msg.format(found))
+        return self._rebuilt(self._adjacency().unionByName(new_nodes))
 
     def remove_subtree_from_closure(self, node_id: str) -> DataFrame:
-        """Closure rows after deleting ``node_id`` and its ENTIRE subtree
-        — the churn/retirement twin of :meth:`extend_closure_with_leaves`
-        (retired product line, closed account, revoked license).
-
-        Every closure row touching the subtree has its DESCENDANT inside
-        it (descendants of subtree members are subtree members, and a
-        doomed ancestor's rows all point at doomed descendants), so ONE
-        anti-join against the doomed id set removes exactly the right
-        rows. The doomed set is the removed node's own descendant list —
-        subtree-sized, broadcast.
-
-        Flag maintenance mirrors the append path: the removed node's
-        parent becomes a leaf again iff it has no remaining direct
-        children. ``node_sort_order`` keeps its original (now gapped)
-        values — relative depth-first order is deletion-invariant, dense
-        renumbering waits for the next rebuild.
-
-        Scope: whole-subtree deletes. An interior delete that REPARENTS
-        surviving children changes their paths → full rebuild. Unknown
-        node ids raise (a silent no-op would mask an upstream id bug).
+        """Closure after deleting ``node_id`` and its ENTIRE subtree
+        (retired product line, closed account). The node's own row leaves
+        the adjacency list; its subtree then has no path to a root, and
+        the rebuild drops it under the start-at-roots rule. An unknown
+        node id raises (a silent no-op would mask an upstream id bug).
         """
-        base = self.aggregation_dim
-        doomed = base.filter(F.col("ancestor_node_id") == node_id).select(
-            F.col("descendant_node_id").alias("_gone")
-        )
-        if doomed.limit(1).count() == 0:
+        if self._closure_ids().filter(F.col("_id") == node_id).isEmpty():
             raise ValueError(
                 f"remove_subtree_from_closure: node {node_id!r} not in closure"
             )
-        kept = base.join(
-            # the doomed set is SUBTREE-sized — near-dim-sized for a
-            # near-root delete: bounded probe, not a blind broadcast
-            dim_side(doomed),
-            base["descendant_node_id"] == doomed["_gone"],
-            "left_anti",
-        )
-        if "ancestor_is_leaf" in base.columns:
-            parent = base.filter(
-                (F.col("descendant_node_id") == node_id) & (F.col("net_level") == 1)
-            ).select(F.col("ancestor_node_id").alias("_p"))
-            still_parents = kept.filter(F.col("net_level") == 1).select(
-                F.col("ancestor_node_id").alias("_p")
-            )
-            newly_leaf = parent.join(still_parents, "_p", "left_anti")
-            for side in ("ancestor", "descendant"):
-                hit = newly_leaf.select(
-                    F.col("_p").alias(f"_hit_{side}")
-                ).withColumn(f"_flip_{side}", F.lit(True))
-                kept = (
-                    kept.join(
-                        F.broadcast(hit),
-                        kept[f"{side}_node_id"] == hit[f"_hit_{side}"],
-                        "left",
-                    )
-                    .withColumn(
-                        f"{side}_is_leaf",
-                        F.when(F.col(f"_flip_{side}"), F.lit(True)).otherwise(
-                            F.col(f"{side}_is_leaf")
-                        ),
-                    )
-                    .drop(f"_hit_{side}", f"_flip_{side}")
-                )
-        return kept
+        return self._rebuilt(self._adjacency().filter(F.col("node_id") != node_id))
 
     def move_subtree_in_closure(
         self, node_id: str, new_parent_id: str
     ) -> DataFrame:
-        """Closure rows after REPARENTING ``node_id`` (with its entire
-        subtree) under ``new_parent_id`` — the reorg twin completing the
-        incremental-maintenance trio (append / delete / move): category
-        recut, org change, folder move. The reference rebuilds its dim
-        tables from scratch on any node change (ref
-        classes/hierarchy_dimension_table.py:162,220); at 100 TB-dim
-        scale a move touching one subtree must not re-walk the tree.
-
-        Closure algebra: with S = the moved subtree's member set,
-        * rows with descendant IN S and ancestor NOT IN S are exactly
-          the old outside-links — dropped (one broadcast membership
-          join; descendants of S-members are S-members, so no other row
-          touches S),
-        * rows WITHIN S keep their shape; both absolute level numbers
-          shift by delta = level(new_parent) + 1 - level(node),
-        * new rows = (ancestors of new_parent, incl. its self-pairs) x
-          (members of S at their shifted levels) — both sides are
-          path/subtree-sized, so the cross join is broadcast-tiny.
-
-        Flag maintenance mirrors delete/append: the old parent becomes
-        a leaf again iff the move removed its last direct child; the
-        new parent stops being one. Moved rows' ``node_sort_order``
-        becomes NULL (display-only, deferred to the next rebuild, same
-        contract as leaf appends). Raises on an unknown node, an
-        unknown new parent, or a new parent inside the moved subtree
-        (which would create a cycle).
+        """Closure after REPARENTING ``node_id`` (with its entire subtree)
+        under ``new_parent_id`` (category recut, org change, folder
+        move): one ``parent_node_id`` in the adjacency list is rewritten
+        and the dim is rebuilt. Raises on an unknown node, an unknown new
+        parent, or a new parent inside the moved subtree (a cycle).
         """
-        base = self.aggregation_dim
-        attr = self._attr_out_cols()
-        members = (
-            base.filter(F.col("ancestor_node_id") == node_id)
-            .select(F.col("descendant_node_id").alias("_m"))
-            .distinct()
-        )
-        # three limit-bounded driver probes (levels + guards), all tiny
-        old = (
-            base.filter(
-                (F.col("descendant_node_id") == node_id)
-                & (F.col("net_level") == 0)
+        # one probe answers all three guards: the two self-pairs, and the
+        # (node, new parent) pair that exists iff the move closes a cycle
+        anc, desc = F.col("ancestor_node_id"), F.col("descendant_node_id")
+        pairs = {
+            tuple(r)
+            for r in self.aggregation_dim.filter(
+                ((F.col("net_level") == 0) & desc.isin(node_id, new_parent_id))
+                | ((anc == node_id) & (desc == new_parent_id))
             )
-            .select("descendant_level_number")
-            .limit(1)
+            .select(anc, desc)
             .collect()
-        )
-        if not old:
+        }
+        if (node_id, node_id) not in pairs:
             raise ValueError(
                 f"move_subtree_in_closure: node {node_id!r} not in closure"
             )
-        new_parent = (
-            base.filter(
-                (F.col("descendant_node_id") == new_parent_id)
-                & (F.col("net_level") == 0)
-            )
-            .select("descendant_level_number")
-            .limit(1)
-            .collect()
-        )
-        if not new_parent:
+        if (new_parent_id, new_parent_id) not in pairs:
             raise ValueError(
                 f"move_subtree_in_closure: new parent {new_parent_id!r} "
                 "not in closure"
             )
-        if members.filter(F.col("_m") == new_parent_id).limit(1).count():
+        if (node_id, new_parent_id) in pairs:
             raise ValueError(
                 f"move_subtree_in_closure: new parent {new_parent_id!r} is "
                 f"inside the subtree of {node_id!r} (would create a cycle)"
             )
-        delta = new_parent[0][0] + 1 - old[0][0]
-
-        memb_d = members.select(F.col("_m").alias("_md"))
-        memb_a = members.select(F.col("_m").alias("_ma"))
-        in_d, in_a = F.col("_md").isNotNull(), F.col("_ma").isNotNull()
-        # subtree membership is near-dim-sized for a near-root move:
-        # bounded probes on both attaches
-        kept = (
-            base.join(
-                dim_side(memb_d), base["descendant_node_id"] == F.col("_md"), "left"
-            )
-            .join(
-                dim_side(memb_a), base["ancestor_node_id"] == F.col("_ma"), "left"
-            )
-            # drop old outside-links; keep outside-outside + within-S rows
-            .filter(~(in_d & ~in_a))
-            .withColumn(
-                "ancestor_level_number",
-                F.when(in_a, F.col("ancestor_level_number") + delta).otherwise(
-                    F.col("ancestor_level_number")
-                ),
-            )
-            .withColumn(
-                "descendant_level_number",
-                F.when(in_d, F.col("descendant_level_number") + delta).otherwise(
-                    F.col("descendant_level_number")
-                ),
-            )
-            .withColumn(
-                "ancestor_node_sort_order",
-                F.when(in_a, F.lit(None).cast("int")).otherwise(
-                    F.col("ancestor_node_sort_order")
-                ),
-            )
-            .withColumn(
-                "descendant_node_sort_order",
-                F.when(in_d, F.lit(None).cast("int")).otherwise(
-                    F.col("descendant_node_sort_order")
-                ),
-            )
-            .drop("_md", "_ma")
-        )
-
-        anc_cols = [f"ancestor_{c}" for c in attr] + [
-            "ancestor_level_number",
-            "ancestor_node_sort_order",
-        ]
-        new_anc = base.filter(
-            F.col("descendant_node_id") == new_parent_id
-        ).select(*anc_cols)
-        memb_rows = (
-            base.filter("net_level = 0")
-            .join(dim_side(members), F.col("descendant_node_id") == F.col("_m"))
-            .select(
-                *[F.col(f"descendant_{c}") for c in attr],
-                (F.col("descendant_level_number") + delta).alias(
-                    "descendant_level_number"
-                ),
-                F.lit(None).cast("int").alias("descendant_node_sort_order"),
+        adjacency = self._adjacency()
+        parent_type = adjacency.schema["parent_node_id"].dataType
+        return self._rebuilt(
+            adjacency.withColumn(
+                "parent_node_id",
+                F.when(
+                    F.col("node_id") == node_id, F.lit(new_parent_id).cast(parent_type)
+                ).otherwise(F.col("parent_node_id")),
             )
         )
-        # broadcast the DEPTH-bounded side (ancestors of ONE node, ≤ tree
-        # depth rows), never the subtree-sized member rows
-        cross = memb_rows.crossJoin(F.broadcast(new_anc)).withColumn(
-            "net_level",
-            F.col("descendant_level_number") - F.col("ancestor_level_number"),
-        )
-        out = kept.unionByName(cross)
-
-        if "ancestor_is_leaf" in base.columns:
-            old_parent = base.filter(
-                (F.col("descendant_node_id") == node_id) & (F.col("net_level") == 1)
-            ).select(F.col("ancestor_node_id").alias("_p"))
-            still_parents = out.filter(F.col("net_level") == 1).select(
-                F.col("ancestor_node_id").alias("_p")
-            )
-            flips = (
-                old_parent.join(still_parents, "_p", "left_anti")
-                .withColumn("_leaf", F.lit(True))
-                .unionByName(
-                    base.filter(
-                        (F.col("descendant_node_id") == new_parent_id)
-                        & (F.col("net_level") == 0)
-                    )
-                    .select(F.col("descendant_node_id").alias("_p"))
-                    .withColumn("_leaf", F.lit(False))
-                )
-            )
-            for side in ("ancestor", "descendant"):
-                hit = flips.select(
-                    F.col("_p").alias(f"_hit_{side}"),
-                    F.col("_leaf").alias(f"_leaf_{side}"),
-                )
-                out = (
-                    out.join(
-                        F.broadcast(hit),
-                        out[f"{side}_node_id"] == hit[f"_hit_{side}"],
-                        "left",
-                    )
-                    .withColumn(
-                        f"{side}_is_leaf",
-                        F.when(
-                            F.col(f"_leaf_{side}").isNotNull(),
-                            F.col(f"_leaf_{side}"),
-                        ).otherwise(F.col(f"{side}_is_leaf")),
-                    )
-                    .drop(f"_hit_{side}", f"_leaf_{side}")
-                )
-        return out
-
 
     def update_node_attributes(self, updates: DataFrame) -> DataFrame:
         """Closure rows with DISPLAY attributes replaced for the given
@@ -1295,5 +1044,3 @@ class HierarchyDimension:
         if self._nodes_base is not None:
             self._nodes_base.unpersist()
             self._nodes_base = None
-        for lv in self._levels:
-            lv.unpersist()

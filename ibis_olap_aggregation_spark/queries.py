@@ -690,11 +690,11 @@ GROUP BY 1
 """,
 )
 def hierarchy_deep_chain_doubling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pathological depth: a 256-node CHAIN (depth = node count) built
-    with the path-doubling walk — 9 pointer-jump rounds instead of 256
-    level joins (the O(log d) strategy for hierarchies whose depth, not
-    width, is the problem). Closure = 32,896 pairs, summarized per
-    net_level for the oracle."""
+    """Pathological depth: a 256-node CHAIN (depth = node count). At
+    256 nodes it is walked on the driver; the name is historical (the
+    query first pinned the O(log depth) path-doubling walk, which now
+    runs only above the local-walk node limit). Closure = 32,896 pairs,
+    summarized per net_level for the oracle."""
     dim = _chain_dim(spark, sf_dir)
     return dim.aggregation_dim.groupBy(
         F.col("net_level").cast("bigint").alias("net_level")

@@ -38,3 +38,15 @@ def sf_small():
 @pytest.fixture(scope="session")
 def sf_oracle():
     return SF_ORACLE
+
+
+@pytest.fixture(params=["local", "doubling"])
+def regime(request, monkeypatch):
+    """Run a test under both walks: the driver-local walk (the default
+    for dim-sized tables) and the doubling walk, forced by a zero node
+    limit."""
+    if request.param == "doubling":
+        from ibis_olap_aggregation_spark.hierarchy import HierarchyDimension
+
+        monkeypatch.setattr(HierarchyDimension, "_LOCAL_WALK_LIMIT", 0)
+    return request.param

@@ -23,16 +23,6 @@ def _dim(spark, rows, **kw):
     )
 
 
-@pytest.fixture(params=["local", "doubling"])
-def regime(request, monkeypatch):
-    """Run a test under both walks: the driver-local walk (the default
-    for dim-sized tables) and the doubling walk, forced by a zero node
-    limit."""
-    if request.param == "doubling":
-        monkeypatch.setattr(HierarchyDimension, "_LOCAL_WALK_LIMIT", 0)
-    return request.param
-
-
 def test_no_root_yields_empty_dims(spark):
     """All nodes have parents (broken FK / cycle-free but rootless):
     the walk anchors on is_root and finds nothing — both dims empty,

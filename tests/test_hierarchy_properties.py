@@ -203,7 +203,8 @@ def test_move_subtree_equals_rebuild_random_trees(spark, x, parents, data):
     def key(r):
         return (r.ancestor_node_id, r.descendant_node_id, r.net_level,
                 r.ancestor_level_number, r.descendant_level_number,
-                r.ancestor_is_leaf, r.descendant_is_leaf)
+                r.ancestor_is_leaf, r.descendant_is_leaf,
+                r.ancestor_node_sort_order, r.descendant_node_sort_order)
 
     assert {key(r) for r in moved.collect()} == {
         key(r) for r in rebuilt.collect()

@@ -1,9 +1,10 @@
-"""Incremental closure maintenance: appending leaves via
-extend_closure_with_leaves must equal a full rebuild (minus the display
-sort order, which is deferred to the next rebuild by contract)."""
+"""Incremental closure maintenance: appending leaves, deleting a
+subtree or moving one must equal a full rebuild of the edited node
+table, in both walk regimes."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from ibis_olap_aggregation_spark.hierarchy import HierarchyDimension
@@ -27,13 +28,15 @@ NEW = [
 
 def _key(r):
     # is_leaf included: parents gaining their first child must have the
-    # flag flipped in the extended closure, exactly as a rebuild would
+    # flag flipped in the extended closure, exactly as a rebuild would;
+    # so are both sort orders, which must stay dense depth-first
     return (r.ancestor_node_id, r.descendant_node_id, r.net_level,
             r.ancestor_level_number, r.descendant_level_number,
-            r.ancestor_is_leaf, r.descendant_is_leaf)
+            r.ancestor_is_leaf, r.descendant_is_leaf,
+            r.ancestor_node_sort_order, r.descendant_node_sort_order)
 
 
-def test_incremental_matches_full_rebuild(spark):
+def test_incremental_matches_full_rebuild(spark, regime):
     base_dim = HierarchyDimension(
         spark.createDataFrame(BASE, SCHEMA),
         sort_key_col="node_natural_key",
@@ -54,9 +57,24 @@ def test_incremental_matches_full_rebuild(spark):
     assert len(got) == len({_key(r) for r in base_dim.aggregation_dim.collect()}) + 6
 
 
-def test_incremental_missing_parent_raises(spark):
-    import pytest
+def test_incremental_duplicate_id_raises(spark):
+    """Appending a node id the closure already holds, or one repeated in
+    the batch, would give the rebuild two rows for one node: it raises
+    and names the id."""
+    base_dim = HierarchyDimension(
+        spark.createDataFrame(BASE, SCHEMA),
+        sort_key_col="node_natural_key",
+        materialize=False,
+    )
+    again = [("a1", 9, "A1 again", "Leaf", "b")]
+    with pytest.raises(ValueError, match="'a1'"):
+        base_dim.extend_closure_with_leaves(spark.createDataFrame(again, SCHEMA))
+    twice = [("b1", 6, "B1", "Leaf", "b"), ("b1", 7, "B1 again", "Leaf", "b")]
+    with pytest.raises(ValueError, match="'b1'"):
+        base_dim.extend_closure_with_leaves(spark.createDataFrame(twice, SCHEMA))
 
+
+def test_incremental_missing_parent_raises(spark):
     base_dim = HierarchyDimension(
         spark.createDataFrame(BASE, SCHEMA),
         sort_key_col="node_natural_key",
@@ -95,10 +113,9 @@ def test_incremental_rollup_correct(spark):
     assert got == {"r": 111.0, "a": 11.0, "b": 100.0, "a1": 1.0, "a2": 10.0, "b1": 100.0}
 
 
-def test_subtree_delete_matches_full_rebuild(spark):
+def test_subtree_delete_matches_full_rebuild(spark, regime):
     """Removing subtree 'a' from r(a(a1,a2), b(b1)) must equal rebuilding
-    from the surviving node rows (minus display sort order, same contract
-    as the append path)."""
+    from the surviving node rows."""
     full = HierarchyDimension(
         spark.createDataFrame(BASE + NEW, SCHEMA),
         sort_key_col="node_natural_key",
@@ -143,8 +160,6 @@ def test_subtree_delete_root_empties_closure(spark):
 
 
 def test_subtree_delete_unknown_node_raises(spark):
-    import pytest
-
     dim = HierarchyDimension(
         spark.createDataFrame(BASE, SCHEMA),
         sort_key_col="node_natural_key",
@@ -189,7 +204,7 @@ def _rebuild(spark, rows):
     ).aggregation_dim
 
 
-def test_move_subtree_matches_full_rebuild(spark):
+def test_move_subtree_matches_full_rebuild(spark, regime):
     base_dim = HierarchyDimension(
         spark.createDataFrame(BASE, SCHEMA),
         sort_key_col="node_natural_key",
@@ -249,8 +264,6 @@ def test_move_rollup_correct_after_reparent(spark):
 
 
 def test_move_guards(spark):
-    import pytest
-
     base_dim = HierarchyDimension(
         spark.createDataFrame(BASE, SCHEMA),
         sort_key_col="node_natural_key",
@@ -295,8 +308,6 @@ def test_update_attributes_matches_full_rebuild(spark):
 
 
 def test_update_attributes_rejects_structural_columns(spark):
-    import pytest
-
     base_dim = HierarchyDimension(
         spark.createDataFrame(BASE, SCHEMA),
         sort_key_col="node_natural_key",
@@ -307,3 +318,25 @@ def test_update_attributes_rejects_structural_columns(spark):
     )
     with pytest.raises(ValueError, match="subset of"):
         base_dim.update_node_attributes(bad)
+
+
+def test_structural_maintenance_leaves_no_cache_entry(spark, regime):
+    """The dim each structural method rebuilds is never handed to the
+    caller, so nobody could unpersist it: with materialize=False nothing
+    may stay cached, on either walk."""
+    from ibis_olap_aggregation_spark import queries
+
+    spark.catalog.clearCache()
+    # the registry's memoized dims just lost their cache: drop them so
+    # later callers rebuild cached ones (plan tests expect cached dims)
+    queries._DIM_CACHE.clear()
+    dim = HierarchyDimension(
+        spark.createDataFrame(BASE + NEW, SCHEMA),
+        sort_key_col="node_natural_key",
+        materialize=False,
+    )
+    leaf = [("a3", 7, "A3", "Leaf", "a")]
+    dim.extend_closure_with_leaves(spark.createDataFrame(leaf, SCHEMA)).collect()
+    dim.remove_subtree_from_closure("b").collect()
+    dim.move_subtree_in_closure("a1", "b").collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

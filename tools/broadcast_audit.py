@@ -20,9 +20,6 @@ Classes:
 - bounded-enum  grouped by a low-cardinality column of the schema
                 (event_type, source, l_returnflag, cohort weeks, dims)
 - calendar      one row per time bucket of the data's span
-- update-batch  incremental-maintenance inputs sized by the UPDATE
-                (new/moved/deleted nodes and their subtree membership),
-                not by the dimension
 - witness-only  small-sf cross-check paths never run at scale (test
                 oracles for the capped production twin)
 - caller-bound  documented caller contract (streaming enrich dim)
@@ -200,15 +197,6 @@ RULES: list[tuple] = [
      "1 row (global max-ts horizon / cohort size scalar)"),
     (r"events\.py$", r"F\.broadcast\(grid\)", "calendar",
      "event_type x hour of the data span (gapfill grid)"),
-    # --- incremental-maintenance batches (hierarchy.py). The dim-,
-    # closure- and subtree-sized sides (known, parent_anc, parent_depth,
-    # doomed, memb_*) route through session.dim_side since round 11 —
-    # only provably small sides keep unconditional hints:
-    (r"hierarchy\.py$", r"F\.broadcast\(hit\b", "update-batch",
-     "leaf-flip set: distinct parents of the append batch / ≤2 parents "
-     "of a single-node move or delete"),
-    (r"hierarchy\.py$", r"F\.broadcast\(new_anc\)", "update-batch",
-     "ancestors of ONE node — ≤ tree-depth rows"),
     (r"hierarchy\.py$", r"F\.broadcast\(u\b", "caller-bound",
      "update_node_attributes: updates are change-sized (docstring "
      "contract — renames/relabels, never structural)"),
@@ -513,7 +501,7 @@ def main(pkg: str | None = None) -> int:
         rows.append((klass, rel, lineno, bound, line))
 
     order = ["resolver", "constant", "single-row", "fixed-k", "bounded-enum",
-             "calendar", "update-batch", "witness-only", "caller-bound",
+             "calendar", "witness-only", "caller-bound",
              "UNCLASSIFIED"]
     rows.sort(key=lambda r: (order.index(r[0]), r[1], r[2]))
     print("| class | site | bound |")
