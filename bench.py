@@ -466,7 +466,19 @@ def _history_path() -> str:
     return os.path.join(_HERE, "BENCH_HISTORY.jsonl")
 
 
-def _prev_bench() -> tuple[dict[str, float], str | None]:
+# the session width every history record predating its "cpus" field
+# was taken at: the baseline pools below count such records as this
+ANCHOR_CPUS = 32
+
+
+def _same_width(rec: dict, cpus: int) -> bool:
+    """True iff a history record was taken at session width ``cpus``:
+    per-query timings at another width are another machine's numbers
+    and must never enter the baseline pool."""
+    return rec.get("cpus", ANCHOR_CPUS) == cpus
+
+
+def _prev_bench(cpus: int = ANCHOR_CPUS) -> tuple[dict[str, float], str | None]:
     """(per-query timings, measurement basis) of the best available
     baseline. PREFERRED source: the last line of BENCH_HISTORY.jsonl —
     bench.py's own full record, written every run. The driver's
@@ -495,7 +507,10 @@ def _prev_bench() -> tuple[dict[str, float], str | None]:
     historic level and flags too, forever. SPARK_GRAFT_BENCH_REBASE=1
     records the current run as clean (flags still PRINTED, only the
     history record is unflagged) so the accepted level enters the
-    baseline pool."""
+    baseline pool.
+
+    Width guard: only records taken at session width ``cpus`` enter
+    the pool (see :func:`_same_width`)."""
     tag = _sf_tag()
     matching: list[dict] = []
     try:
@@ -505,7 +520,12 @@ def _prev_bench() -> tuple[dict[str, float], str | None]:
                     rec = json.loads(ln)
                 except Exception:  # noqa: BLE001
                     continue
-                if rec.get("queries") and tag is not None and rec.get("sf") == tag:
+                if (
+                    rec.get("queries")
+                    and tag is not None
+                    and rec.get("sf") == tag
+                    and _same_width(rec, cpus)
+                ):
                     matching.append(rec)
     except OSError:
         pass
@@ -582,12 +602,14 @@ def _prev_bench() -> tuple[dict[str, float], str | None]:
     return (best[1], best[2]) if best else ({}, None)
 
 
-def _clean_floor_box_medians() -> tuple[float | None, float | None]:
-    """(median floor_raw, median box_factor) over the clean same-sf
-    same-basis history records that CARRY a floor_raw — the baseline
-    pool for the self-relative engine-vs-machine divergence check.
-    (None, None) until such records exist, which disarms the check
-    (records predating the floor field never block a bench)."""
+def _clean_floor_box_medians(
+    cpus: int = ANCHOR_CPUS,
+) -> tuple[float | None, float | None]:
+    """(median floor_raw, median box_factor) over the clean same-sf,
+    same-basis, same-width history records that CARRY a floor_raw — the
+    baseline pool for the self-relative engine-vs-machine divergence
+    check. (None, None) until such records exist, which disarms the
+    check (records predating the floor field never block a bench)."""
     tag = _sf_tag()
     floors: list[float] = []
     boxes: list[float] = []
@@ -600,6 +622,7 @@ def _clean_floor_box_medians() -> tuple[float | None, float | None]:
                     continue
                 if (
                     rec.get("sf") == tag
+                    and _same_width(rec, cpus)
                     and rec.get("basis") == BENCH_BASIS
                     and not rec.get("regressions")
                     and not rec.get("unstable_box")
@@ -686,12 +709,13 @@ def main() -> None:
         n: timings[n] for n in BOX_PROBES if n in timings and n not in inject
     }
     floor_raw = floor_probe_median(spark)
-    clean_floor, clean_box = _clean_floor_box_medians()
+    cpus = spark.sparkContext.defaultParallelism
+    clean_floor, clean_box = _clean_floor_box_medians(cpus)
     floor_factor = (
         round(floor_raw / clean_floor, 3) if clean_floor else None
     )
     divergence = floor_divergence(box_factor, clean_box, floor_factor)
-    prev, prev_basis = _prev_bench()
+    prev, prev_basis = _prev_bench(cpus)
     # the clean-pool baseline is box-NORMALIZED (each record divided by
     # its recorded box_factor); compare this run's timings on the same
     # basis so a slow box doesn't read as a code regression and a fast
@@ -778,6 +802,7 @@ def main() -> None:
                         "spread": spreads,
                         "basis": BENCH_BASIS,
                         "sf": out["sf"],
+                        "cpus": cpus,
                         "total": out["value"],
                         "box_factor": box_factor,
                         # self-marked: excluded from the clean pool by

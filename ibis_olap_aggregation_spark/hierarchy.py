@@ -17,14 +17,16 @@ two DuckDB recursive CTEs. Differences by design:
   build and a single-partition window besides. The dense
   ``node_sort_order`` integer is computed scalably (range-partition +
   per-partition row_number + offsets), not with a global window.
-- Cycle/orphan semantics (the same on both walks): a cycle in
-  parent_node_id can never be root-reachable (every node has ONE parent
-  pointer, so walking down from roots cannot enter a cycle) — cycles are
-  always detached islands. Builds with ``materialize=True`` detect them
-  (reached-count check + chain classification) and raise ValueError;
-  orphan subtrees (parent id absent from the table) are dropped
-  silently, matching the reference CTE's start-at-roots semantics.
-  Over-deep hierarchies raise instead of looping forever.
+- Bad input gets one verdict on both walks, whatever ``materialize``:
+  a duplicate or NULL ``node_id`` and a cycle in parent_node_id (its
+  members and every node under it) raise ValueError naming up to five
+  ids. A cycle is never root-reachable (every node has ONE parent
+  pointer), so each walk finds it among the rows it did not reach.
+  Orphan subtrees (parent id absent) are dropped silently, matching the
+  reference CTE's start-at-roots semantics. Over-deep hierarchies raise
+  instead of looping forever; on the doubling walk a cycle or orphan
+  chain longer than its final segment (``2^(rounds+1)`` nodes) reads as
+  too deep.
 
 Output column contract mirrors the reference:
 
@@ -39,6 +41,8 @@ aggregation dim / closure (ref :197-218): ancestor_<col> +
 
 from __future__ import annotations
 
+from collections import Counter
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -48,7 +52,27 @@ from ibis_olap_aggregation_spark.session import dim_side
 
 __all__ = ["HierarchyDimension", "prepare_nodes"]
 
-_INTERNAL_COLS = ("node_json", "node_json_path", "_sort_path")
+def _named(ids: list) -> str:
+    """The first five of ``ids`` as reprs, with an ellipsis past them."""
+    return ", ".join(repr(v) for v in ids[:5]) + (", ..." if len(ids) > 5 else "")
+
+
+def _reject_bad_ids(has_null: bool, dups: list) -> None:
+    """The id verdict both walks give: a NULL or repeated ``node_id``
+    would be walked as a node of its own (or twice), so it raises."""
+    if has_null:
+        raise ValueError("NULL node_id in hierarchy input")
+    if dups:
+        raise ValueError(f"duplicate node_id in hierarchy input: {_named(dups)}")
+
+
+def _cycle_error(ids: list) -> ValueError:
+    """The cycle verdict both walks give, naming ids in or under it."""
+    return ValueError(f"cycle detected in parent_node_id: {_named(ids)}")
+
+
+def _depth_error(max_depth: int) -> ValueError:
+    return ValueError(f"hierarchy deeper than max_depth={max_depth} (raise max_depth)")
 
 
 def _known_size_side(df: DataFrame, n_rows: int | None) -> DataFrame:
@@ -133,13 +157,13 @@ class HierarchyDimension:
         SURVEY.md §7.5.1.)
     max_depth : depth guard; a hierarchy deeper than this raises
         ValueError (cycles are never root-reachable, so they cannot
-        trip it — the reach check names them).
+        trip it — the walk names them instead).
     flatten_levels : number of ``level_{i}_*`` column groups in the
         reporting dim (the reference hardcodes 10; ref :147).
     materialize : cache the walk result and both dims (the walk feeds
         both), mirroring the reference's CTAS-then-reread (ref
-        :162-173), and run the reach check that names cycles. It does
-        not choose the walk.
+        :162-173). It neither chooses the walk nor changes what bad
+        input raises.
     compute_sort_order : False skips the ranking passes entirely
         (``node_sort_order`` comes back NULL): rollup correctness never
         depends on display order, so pure-aggregation consumers of big
@@ -187,6 +211,7 @@ class HierarchyDimension:
         # when the explode ran over the reconstructing view).
         self._compact = None
         self._attr_row = None
+        self._walked = None  # the doubling walk's view; the local walk has none
         local = self._fetch_if_dim_sized(
             prepare_nodes(nodes, node_id_col, parent_node_id_col, with_leaf=False)
         )
@@ -204,11 +229,15 @@ class HierarchyDimension:
         self.nodes = prepare_nodes(
             nodes, node_id_col, parent_node_id_col, known_rows=self._n_nodes
         )
+        if local is None:
+            # distributed path: when materializing, cache the (possibly
+            # expensive) source-derived node table while the id check
+            # reads it; released after the walk is materialized (the
+            # repartitioned cache takes over)
+            base = self.nodes.cache() if materialize else self.nodes
+            self._n_nodes = self._check_ids_distributed(base)
         if materialize and local is None:
-            # distributed path: cache the (possibly expensive)
-            # source-derived node table while we count it; released after
-            # the walk is materialized (the repartitioned cache takes over)
-            self._nodes_base = self.nodes.cache()
+            self._nodes_base = base
             # Size the walk's parallelism to the DIMENSION, not to the
             # partitioning the source scans happened to leave behind:
             # each round is a job over these partitions, so a 15k-node
@@ -216,13 +245,11 @@ class HierarchyDimension:
             # task-scheduling overhead per round (measured 2.4x slower).
             # ~250k nodes/partition, floor 4 (cluster-safe: dims are
             # dim-sized), cap at the session shuffle width.
-            n = self._nodes_base.count()  # also materializes the cache
-            self._n_nodes = n
             cap = int(
                 self.nodes.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
             )
-            parts = min(cap, max(4, n // 250_000 + 1))
-            self.nodes = self._nodes_base.repartition(parts).cache()
+            parts = min(cap, max(4, self._n_nodes // 250_000 + 1))
+            self.nodes = base.repartition(parts).cache()
         if sort_key_col is None:
             sort_key_col = (
                 "node_natural_key" if "node_natural_key" in self.nodes.columns else "node_id"
@@ -233,26 +260,15 @@ class HierarchyDimension:
         self._struct_cols = list(self.nodes.columns)
 
         if local is not None:
-            self._walked = self._walk_local(local)
+            self._walk_local(local)
         else:
             self._walked = self._walk_doubling()
-        if materialize:
-            if self._walked_local_count is not None:
-                # the local walk already knows its row count AND is
-                # eagerly checkpointed (executor-side blocks) — a
-                # cache()+count() on top would re-scan and double-store
-                walked_n = self._walked_local_count
-            else:
+            if materialize:
                 self._walked = self._walked.cache()
-                walked_n = self._walked.count()  # materialize; enables reach check
-            if self._nodes_base is not None:
-                self._nodes_base.unpersist()
-                self._nodes_base = None
-            if walked_n < (self._n_nodes or 0):
-                # some nodes never reached a root: orphan subtrees are
-                # dropped silently (reference CTE semantics); a cycle is
-                # data corruption and raises
-                self._classify_unreached()
+                self._walked.count()  # both dims read it
+        if self._nodes_base is not None:
+            self._nodes_base.unpersist()
+            self._nodes_base = None
         self.reporting_dim = self._build_reporting_dim()
         self.aggregation_dim = self._build_aggregation_dim()
         if materialize:
@@ -266,7 +282,8 @@ class HierarchyDimension:
         """The node table as a driver Arrow table (with ``is_leaf``
         derived on the driver) when it has at most ``_LOCAL_WALK_LIMIT``
         rows and Arrow can carry its types; otherwise None, and the
-        doubling walk runs.
+        doubling walk runs. A fetched table with a NULL or duplicate
+        ``node_id`` raises (the local walk's id check).
 
         ONE bounded fetch doubles as the size probe and the local-walk
         input, so dim-sized tables (the common case) never pay a
@@ -314,13 +331,30 @@ class HierarchyDimension:
         # per-row dicts
         pset = {p for p in tbl.column("parent_node_id").to_pylist() if p is not None}
         nid = tbl.column("node_id").to_pylist()
+        _reject_bad_ids(
+            tbl.column("node_id").null_count > 0,
+            sorted(v for v, c in Counter(nid).items() if c > 1 and v is not None),
+        )
         return tbl.append_column(
             "is_leaf", pa.array([v not in pset for v in nid], pa.bool_())
         )
 
-    # -- unreached-node classification (cycle vs orphan) -----------------
-    _UNREACHED_DRIVER_LIMIT = 100_000
-    _PEEL_MAX_ROUNDS = 200
+    @staticmethod
+    def _check_ids_distributed(nodes: DataFrame) -> int:
+        """The doubling walk's id check: ONE grouped aggregate over
+        ``node_id`` yields the row count, whether a NULL id occurs and
+        the first duplicated ids; raises on either, else returns the
+        row count."""
+        per_id = nodes.groupBy("node_id").count()
+        dup = F.when(F.col("node_id").isNotNull() & (F.col("count") > 1), F.col("node_id"))
+        row = per_id.agg(
+            F.sum("count").alias("n"),
+            F.max(F.col("node_id").isNull()).alias("has_null"),
+            F.slice(F.sort_array(F.collect_list(dup)), 1, 6).alias("dups"),
+        ).first()
+        _reject_bad_ids(bool(row["has_null"]), row["dups"])
+        return int(row["n"] or 0)
+
     _LOCAL_WALK_LIMIT = 250_000  # driver BFS above this is a collect() smell
     # plan-stats bound for fetching the node table without a count probe:
     # 512 MB of estimated input is far above any dim-sized table and far
@@ -367,10 +401,11 @@ class HierarchyDimension:
             return None
 
     # -- stage 1a: driver-local walk for dim-sized node tables -----------
-    def _walk_local(self, tbl) -> DataFrame:
+    def _walk_local(self, tbl) -> None:
         """Driver-side DFS over the fetched Arrow node table, producing
-        the walked schema (attrs + level_number + node_json_path +
-        _sort_path + node_sort_order) that :meth:`_walk_doubling` emits.
+        the compact walk both dims read: ``self._compact`` (attrs +
+        level_number + ancestor row indices + node_sort_order) and
+        ``self._attr_row`` (every node's attribute struct, one row).
 
         Dimension hierarchies are dim-sized by definition; under
         ``_LOCAL_WALK_LIMIT`` nodes the adjacency list fits trivially in
@@ -388,21 +423,21 @@ class HierarchyDimension:
           ancestor index chain, so the flattened path is a single take
           of each attribute column.
 
-        Orphans are dropped (start-at-roots semantics) and cycles are
-        left unreached for the uniform reach-check to classify; depth
-        overflow raises the same error as the doubling walk.
+        Rows the DFS never reached either hang off a missing parent
+        (orphans: dropped, start-at-roots semantics) or sit in or under a
+        cycle (raise, naming them); depth overflow raises the same error
+        as the doubling walk.
         """
         import numpy as np
         import pyarrow as pa
         from pyspark.sql.pandas.types import to_arrow_schema
 
         cols = self._struct_cols
-        sort_key = self.sort_key_col
         n = tbl.num_rows
         node_id = tbl.column("node_id").to_pylist()
         parent_id = tbl.column("parent_node_id").to_pylist()
         is_root = tbl.column("is_root").to_pylist()
-        skv = tbl.column(sort_key).to_pylist()
+        skv = tbl.column(self.sort_key_col).to_pylist()
         children: dict = {}
         roots: list[int] = []
         for i in range(n):
@@ -430,10 +465,7 @@ class HierarchyDimension:
         while stack:
             i, level, path = stack.pop()
             if level > max_depth:
-                raise ValueError(
-                    f"hierarchy deeper than max_depth={max_depth} "
-                    "(raise max_depth)"
-                )
+                raise _depth_error(max_depth)
             path = path + (i,)
             order.append(i)
             levels.append(level)
@@ -441,6 +473,10 @@ class HierarchyDimension:
             path_off.append(len(path_flat))
             for ch in reversed(children.get(node_id[i], ())):
                 stack.append((ch, level + 1, path))
+        if len(order) < n:
+            cyclic = self._cycle_ids(node_id, parent_id, order)
+            if cyclic:
+                raise _cycle_error(cyclic)
         node_schema = self.nodes.schema
         # compact transfer: shipping every ancestor's FULL attribute
         # struct per descendant puts sum(depth(n)) structs through
@@ -448,11 +484,10 @@ class HierarchyDimension:
         # a deep dim build; a 65k-node binary tree carries ~1M path
         # entries). Ship each node's attributes ONCE instead: the
         # checkpointed frame stores the path as ancestor ROW-INDEX arrays
-        # (ints), a single-row side frame broadcasts the attribute
-        # structs in original row order, and the returned view rebuilds
-        # node_json_path/_sort_path per row from the broadcast — the
-        # walked schema the doubling walk emits (agreement-pinned in
-        # tests/test_opt_r14.py).
+        # (ints), and a single-row side frame broadcasts the attribute
+        # structs in original row order; each dim fetches an ancestor's
+        # struct from that broadcast by index (agreement with the
+        # doubling walk's dims is pinned in tests/test_opt_r14.py).
         attr_struct_t = T.StructType([node_schema[c] for c in cols])
         compact_schema = T.StructType(
             [node_schema[c] for c in cols]
@@ -513,80 +548,30 @@ class HierarchyDimension:
                 ),
             )
         )
-        anc = "transform(_path_idx, x -> element_at(_attrs, cast(x + 1 as int)))"
-        entry = ", ".join(f"'{c}', s.`{c}`" for c in cols)
-        path_expr = (
-            f"transform({anc}, (s, i) -> "
-            f"named_struct({entry}, 'level_number', cast(i + 1 as int)))"
-        )
-        sort_expr = f"transform({anc}, s -> s.`{sort_key}`)"
-        walked = compact.crossJoin(F.broadcast(attr_row)).select(
-            *[F.col(c) for c in cols],
-            F.col("level_number"),
-            F.expr(path_expr).alias("node_json_path"),
-            F.expr(sort_expr).alias("_sort_path"),
-            F.col("node_sort_order"),
-        )
         self._walked_local_count = n_out
         self._compact = compact
         self._attr_row = attr_row
-        return walked
 
-    def _classify_unreached(self) -> None:
-        """Nodes absent from the walk either hang off a MISSING parent
-        (orphan subtree — dropped silently) or sit in/under a detached
-        CYCLE (raise). Small sets classify on the driver with a colored
-        chain walk; larger sets run a distributed peel — repeatedly
-        semi-join away nodes whose parent already left the set; a
-        non-shrinking non-empty fixpoint proves a cycle."""
-        un = self.nodes.select("node_id", "parent_node_id").join(
-            self._walked.select("node_id"), "node_id", "left_anti"
-        )
-        rows = un.limit(self._UNREACHED_DRIVER_LIMIT + 1).collect()
-        if len(rows) <= self._UNREACHED_DRIVER_LIMIT:
-            parent = {r["node_id"]: r["parent_node_id"] for r in rows}
-            done: dict[str, bool] = {}
-            for start in parent:
-                if done.get(start):
-                    continue
-                chain: list = []
-                x = start
-                while x in parent and not done.get(x):
-                    if done.get(x) is False:  # in the CURRENT chain
-                        cyc = chain[chain.index(x):]
-                        raise ValueError(
-                            f"cycle detected in parent_node_id: "
-                            f"{' -> '.join(str(c) for c in cyc[:6])}"
-                            f"{' -> ...' if len(cyc) > 6 else ''}"
-                        )
-                    done[x] = False
-                    chain.append(x)
-                    x = parent[x]
-                for c in chain:
-                    done[c] = True
-            return  # every chain exits the set: orphans only
-        un = un.cache()
-        prev = un.count()
-        for _ in range(self._PEEL_MAX_ROUNDS):
-            in_set = un.select(F.col("node_id").alias("_p"))
-            nxt = un.join(
-                in_set, un["parent_node_id"] == in_set["_p"], "left_semi"
-            ).cache()
-            cur = nxt.count()
-            un.unpersist()
-            un = nxt
-            if cur == 0:
-                return  # peeled to nothing: orphan chains only
-            if cur == prev:
-                raise ValueError(
-                    f"cycle detected in parent_node_id ({cur} nodes in or "
-                    "under detached cycles)"
-                )
-            prev = cur
-        # rounds exhausted while still shrinking: pathologically long
-        # orphan chains — treat as orphans (no fixpoint was reached)
-        un.unpersist()
-
+    @staticmethod
+    def _cycle_ids(node_id: list, parent_id: list, visited: list) -> list:
+        """Sorted ids of the unvisited rows that sit in or under a cycle.
+        Each unvisited row's parent chain is followed once (a colored
+        walk): a chain that ends at a missing parent is an orphan chain,
+        one that revisits itself or joins a cyclic chain is cyclic."""
+        row = {v: i for i, v in enumerate(node_id)}
+        # row -> in or under a cycle; None while on the chain followed
+        cyclic: dict[int, bool | None] = dict.fromkeys(visited, False)
+        for start in range(len(node_id)):
+            chain: list[int] = []
+            i = start
+            while i is not None and i not in cyclic:
+                cyclic[i] = None
+                chain.append(i)
+                i = row.get(parent_id[i])
+            verdict = i is not None and cyclic[i] is not False
+            for c in chain:
+                cyclic[c] = verdict
+        return sorted(node_id[i] for i, v in cyclic.items() if v)
 
     def _rank(self, walked):
         """Dense depth-first order, or a NULL column when the consumer
@@ -659,24 +644,24 @@ class HierarchyDimension:
             )
         else:
             # jumps still pending after ceil(log2 max_depth)+1 rounds:
-            # either members of a detached cycle (their segment wraps, so
-            # node_ids repeat once it outgrows the cycle length — dropped
-            # silently here, exactly like the local walk never visits
-            # them; the materialized reach-check is the uniform raise
-            # point for cycles) or genuinely deeper nodes (raise: a
-            # silent drop would truncate a legitimate tree).
-            pending = state.filter(F.col("_jump").isNotNull())
-            too_deep = pending.filter(
-                F.expr(
-                    "size(_seg) = size(array_distinct(transform(_seg, s -> s.node_id)))"
-                )
+            # genuinely deeper nodes, or nodes in or under a cycle (their
+            # segment wraps, so node_ids repeat). Both raise; one ordered
+            # fetch tells them apart, as a row without a repeat sorts
+            # first. A cycle longer than the segment reads as too deep.
+            repeats = F.expr(
+                "size(_seg) > size(array_distinct(transform(_seg, s -> s.node_id)))"
             )
-            if not too_deep.isEmpty():
-                raise ValueError(
-                    f"hierarchy deeper than max_depth={self.max_depth} "
-                    "(raise max_depth)"
-                )
-            state = state.filter(F.col("_jump").isNull())
+            first = (
+                state.filter(F.col("_jump").isNotNull())
+                .select("_v", repeats.alias("_cyc"))
+                .orderBy("_cyc", "_v")
+                .limit(6)
+                .collect()
+            )
+            if first and not first[0]["_cyc"]:
+                raise _depth_error(self.max_depth)
+            if first:
+                raise _cycle_error([r["_v"] for r in first])
         # nodes with a parent missing from the table (orphans) never
         # terminate at a root: their first seg element is not a root.
         # The local walk drops them; do the same here.
@@ -687,10 +672,7 @@ class HierarchyDimension:
         # rounds bound has slack (2^(rounds+1) >= 2*max_depth), so a tree
         # the local walk would reject could complete here — enforce it
         if not done.filter(F.size("_seg") > self.max_depth).isEmpty():
-            raise ValueError(
-                f"hierarchy deeper than max_depth={self.max_depth} "
-                "(raise max_depth)"
-            )
+            raise _depth_error(self.max_depth)
         lvl = F.size("_seg")
         walked = done.select(
             *[
@@ -883,23 +865,19 @@ class HierarchyDimension:
 
         Raises when a new node's parent is not in the closure (interior
         and orphan inserts are outside this method's contract, and the
-        walk would drop them silently), and when a new ``node_id`` is
-        already in the closure or repeated in the batch.
+        walk would drop them silently); the rebuild's id check raises
+        when a new ``node_id`` is already in the closure or repeated in
+        the batch.
         """
         ids = self._closure_ids()
         new = new_nodes.select("node_id", "parent_node_id")
         orphans = new.join(ids, new["parent_node_id"] == ids["_id"], "left_anti")
-        repeated = new.join(ids, new["node_id"] == ids["_id"], "left_semi").select(
-            "node_id"
-        ).union(new.groupBy("node_id").count().filter("count > 1").select("node_id"))
-        for bad, msg in (
-            (orphans, "parent not in existing closure for new nodes {} (leaf "
-             "appends only — rebuild for interior inserts)"),
-            (repeated, "node ids {} already in the closure or repeated in the batch"),
-        ):
-            found = [r[0] for r in bad.select("node_id").distinct().limit(5).collect()]
-            if found:
-                raise ValueError("extend_closure_with_leaves: " + msg.format(found))
+        found = [r[0] for r in orphans.select("node_id").distinct().limit(5).collect()]
+        if found:
+            raise ValueError(
+                f"extend_closure_with_leaves: parent not in existing closure for "
+                f"new nodes {found} (leaf appends only — rebuild for interior inserts)"
+            )
         return self._rebuilt(self._adjacency().unionByName(new_nodes))
 
     def remove_subtree_from_closure(self, node_id: str) -> DataFrame:
@@ -1037,7 +1015,8 @@ class HierarchyDimension:
         return rep, agg
 
     def unpersist(self) -> None:
-        self._walked.unpersist()
+        if self._walked is not None:
+            self._walked.unpersist()
         self.nodes.unpersist()
         self.reporting_dim.unpersist()
         self.aggregation_dim.unpersist()

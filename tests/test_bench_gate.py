@@ -254,6 +254,36 @@ def test_prev_bench_box_normalizes_clean_pool(tmp_path, monkeypatch):
     assert queries == {"q1": 1.0}
 
 
+def test_prev_bench_pool_keyed_by_cpus(tmp_path, monkeypatch):
+    """A clean run at another session width (an 8-cpu scaling run)
+    must never enter the 32-cpu baseline pool, and vice versa. Records
+    predating the ``cpus`` field count as 32."""
+    import json
+
+    hist = [
+        {"queries": {"q1": 1.0}, "basis": "median3", "sf": 0.1,
+         "floor_raw": 0.5, "box_factor": 1.0},
+        {"queries": {"q1": 1.0}, "basis": "median3", "sf": 0.1, "cpus": 32,
+         "floor_raw": 0.5, "box_factor": 1.0},
+        # clean, but ~1.4x slower per query at a quarter of the width
+        {"queries": {"q1": 1.4}, "basis": "median3", "sf": 0.1, "cpus": 8,
+         "floor_raw": 0.7, "box_factor": 1.0},
+        {"queries": {"q1": 1.4}, "basis": "median3", "sf": 0.1, "cpus": 8,
+         "floor_raw": 0.7, "box_factor": 1.0},
+    ]
+    (tmp_path / "BENCH_HISTORY.jsonl").write_text(
+        "\n".join(json.dumps(r) for r in hist) + "\n"
+    )
+    monkeypatch.setattr(bench, "_HERE", str(tmp_path))
+    monkeypatch.setattr(bench, "SF_DIR", str(tmp_path / "sf0.1"))
+    assert bench._prev_bench(32) == ({"q1": 1.0}, bench.BENCH_BASIS)
+    assert bench._prev_bench(8) == ({"q1": 1.4}, bench.BENCH_BASIS)
+    assert bench._clean_floor_box_medians(32) == (0.5, 1.0)
+    assert bench._clean_floor_box_medians(8) == (0.7, 1.0)
+    # a width with no history of its own never arms against another's
+    assert bench._prev_bench(4) == ({}, None)
+
+
 def test_box_factor_from_headline_medians():
     """The factor comes from the probes' own warm headline medians —
     never a cold start-of-run pass (measured 3.785 on a ~1.4x box) —

@@ -24,10 +24,11 @@ def _dim(spark, rows, **kw):
 
 
 def test_no_root_yields_empty_dims(spark):
-    """All nodes have parents (broken FK / cycle-free but rootless):
-    the walk anchors on is_root and finds nothing — both dims empty,
-    matching the reference's silent-empty behavior (ref :118)."""
-    d = _dim(spark, [("a", 1, "A", "L", "b"), ("b", 2, "B", "L", "a")])
+    """All nodes have parents (broken FK, cycle-free but rootless): the
+    walk anchors on is_root and finds nothing — both dims empty,
+    matching the reference's silent-empty behavior (ref :118). (A
+    rootless 2-cycle raises instead; see test_bad_input_same_verdict.)"""
+    d = _dim(spark, [("a", 1, "A", "L", "missing"), ("b", 2, "B", "L", "a")])
     assert d.reporting_dim.count() == 0
     assert d.aggregation_dim.count() == 0
 
@@ -137,8 +138,8 @@ _CYCLE_ROWS = [
 
 def test_cycle_detected_when_materialized(spark, regime):
     """A cycle in parent_node_id is data corruption: both walks raise an
-    explicit cycle error on a materialized build (the reached-count
-    check classifies unreached nodes)."""
+    explicit cycle error on a materialized build (each walk classifies
+    the rows it never reached)."""
     with pytest.raises(ValueError, match="cycle detected"):
         HierarchyDimension(
             spark.createDataFrame(_CYCLE_ROWS, SCHEMA),
@@ -149,7 +150,7 @@ def test_cycle_detected_when_materialized(spark, regime):
 
 def test_orphans_still_silent_when_materialized(spark):
     """Orphan subtrees (missing parent id) keep the reference's silent
-    drop semantics even under the materialized reach check."""
+    drop semantics on a materialized build too."""
     rows = [
         ("r", 1, "Root", "Top", None),
         ("c", 2, "Child", "Leaf", "r"),
@@ -163,6 +164,82 @@ def test_orphans_still_silent_when_materialized(spark):
     )
     assert {r.node_id for r in d.reporting_dim.collect()} == {"r", "c"}
     d.unpersist()
+
+
+_ROOT = ("r", 1, "Root", "Top", None)
+_BAD_INPUTS = {
+    # case -> (rows, build kwargs, the error message, or None for an
+    # orphan chain the build drops silently, keeping r and c)
+    "dup_interior": (
+        [_ROOT, ("a", 2, "A", "Mid", "r"), ("a", 3, "A again", "Mid", "r"),
+         ("a1", 4, "A1", "Leaf", "a")],
+        {}, "duplicate node_id in hierarchy input: 'a'",
+    ),
+    "dup_leaf": (
+        [_ROOT, ("a", 2, "A", "Mid", "r"), ("a1", 3, "A1", "Leaf", "a"),
+         ("a1", 4, "A1 again", "Leaf", "r")],
+        {}, "duplicate node_id in hierarchy input: 'a1'",
+    ),
+    "null_id": (
+        [_ROOT, ("a", 2, "A", "Leaf", "r"), (None, 3, "Nameless", "Leaf", "r")],
+        {}, "NULL node_id in hierarchy input",
+    ),
+    # the tie puts the NULL id into the sibling sort's tiebreak
+    "null_id_sort_tie": (
+        [_ROOT, ("a", 2, "A", "Leaf", "r"), (None, 2, "Nameless", "Leaf", "r")],
+        {}, "NULL node_id in hierarchy input",
+    ),
+    "detached_cycle": (
+        _CYCLE_ROWS, {}, "cycle detected in parent_node_id: 'x', 'y', 'z'",
+    ),
+    "self_parent": (
+        [_ROOT, ("c", 2, "C", "Leaf", "r"), ("s", 3, "S", "L", "s")],
+        {}, "cycle detected in parent_node_id: 's'",
+    ),
+    "under_cycle": (
+        [_ROOT, ("x", 2, "X", "L", "y"), ("y", 3, "Y", "L", "x"),
+         ("u", 4, "U", "L", "x"), ("u2", 5, "U2", "Leaf", "u")],
+        {}, "cycle detected in parent_node_id: 'u', 'u2', 'x', 'y'",
+    ),
+    "orphan_chain": (
+        [_ROOT, ("c", 2, "C", "Leaf", "r"), ("o1", 3, "O1", "L", "missing"),
+         ("o2", 4, "O2", "Leaf", "o1")],
+        {}, None,
+    ),
+    "over_deep_chain": (
+        [("n0", 0, "N0", "L", None)]
+        + [(f"n{i}", i, f"N{i}", "L", f"n{i - 1}") for i in range(1, 6)],
+        {"max_depth": 3}, "hierarchy deeper than max_depth=3 (raise max_depth)",
+    ),
+}
+
+
+@pytest.mark.parametrize("materialize", [False, True])
+@pytest.mark.parametrize("case", sorted(_BAD_INPUTS))
+def test_bad_input_same_verdict(spark, regime, case, materialize):
+    """Every bad input gets one verdict on both walks and for both
+    ``materialize`` values: duplicate ids, NULL ids, cycles (a node that
+    is its own parent and nodes under a cycle included) and over-deep
+    trees raise with the same message, naming the ids; an orphan chain
+    is dropped silently."""
+    rows, kw, message = _BAD_INPUTS[case]
+    nodes = spark.createDataFrame(rows, SCHEMA)
+
+    def build():
+        return HierarchyDimension(
+            nodes, sort_key_col="node_natural_key", materialize=materialize, **kw
+        )
+
+    if message is None:
+        d = build()
+        assert (d._compact is not None) == (regime == "local")
+        assert sorted(r.node_id for r in d.reporting_dim.collect()) == ["c", "r"]
+        assert d.aggregation_dim.count() == 3
+        d.unpersist()
+        return
+    with pytest.raises(ValueError) as err:
+        build()
+    assert str(err.value) == message
 
 
 def test_deep_tree_raises_depth_not_cycle(spark, monkeypatch):

@@ -117,23 +117,20 @@ def test_cycle_detection(spark):
     )
     import pytest
 
-    # materialized builds run the reach check and NAME the cycle
-    with pytest.raises(ValueError, match="cycle detected"):
-        HierarchyDimension(nodes, max_depth=5)
-    # lazy builds keep the walk's silent start-at-roots semantics
-    dim = HierarchyDimension(nodes, max_depth=5, materialize=False)
-    assert dim.reporting_dim.count() == 0
+    # every build NAMES the cycle, materialized or not
+    for materialize in (True, False):
+        with pytest.raises(ValueError, match="cycle detected.*'a', 'b'"):
+            HierarchyDimension(nodes, max_depth=5, materialize=materialize)
 
     cyc = spark.createDataFrame(
         [("r", 0, "R", "L", None), ("a", 1, "A", "L", "b"), ("b", 2, "B", "L", "a")],
         "node_id string, node_natural_key int, node_name string, "
         "level_name string, parent_node_id string",
     )
-    with pytest.raises(ValueError, match="cycle detected"):
-        HierarchyDimension(cyc, max_depth=5)
-    # orphan cycle unreachable from root -> silently dropped by the lazy walk
-    dim2 = HierarchyDimension(cyc, max_depth=5, materialize=False)
-    assert dim2.reporting_dim.count() == 1
+    # a cycle unreachable from the root raises too, not a silent drop
+    for materialize in (True, False):
+        with pytest.raises(ValueError, match="cycle detected"):
+            HierarchyDimension(cyc, max_depth=5, materialize=materialize)
 
     # a chain deeper than max_depth raises (the reference's CTEs would
     # only stop at DuckDB's recursion limit)

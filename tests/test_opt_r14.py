@@ -3,6 +3,8 @@ keep their outputs bit-identical to the unoptimized paths."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -62,10 +64,11 @@ def _messy_nodes(spark):
 
 
 def test_local_walk_matches_doubling_walk(spark, monkeypatch):
-    """The driver-local walk must emit exactly the doubling walk's rows
-    — attributes, level numbers, dense DFS sort order, struct paths,
-    and _sort_path — and the same closure, on a forest exercising null
-    sort keys, orphans, multi-root ordering, and sibling ties."""
+    """The driver-local walk must give exactly the doubling walk's
+    reporting dim — attributes, level numbers, dense DFS sort order, the
+    node_json struct and every flattened level column — and the same
+    closure, on a forest exercising null sort keys, orphans, multi-root
+    ordering, and sibling ties."""
     from ibis_olap_aggregation_spark.hierarchy import HierarchyDimension
 
     nodes = _messy_nodes(spark)
@@ -76,10 +79,10 @@ def test_local_walk_matches_doubling_walk(spark, monkeypatch):
     assert local._compact is not None and doubling._compact is None
 
     def rows(d):
-        out = d._walked.select(
+        levels = [c for c in d.reporting_dim.columns if re.match(r"level_\d+_", c)]
+        out = d.reporting_dim.select(
             "node_id", "node_name", "level_number", "node_sort_order",
-            F.to_json("node_json_path").alias("path_json"),
-            F.col("_sort_path").cast("array<string>").alias("sp"),
+            F.to_json("node_json").alias("json"), *levels,
         ).collect()
         return sorted(tuple(r) for r in out)
 
