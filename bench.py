@@ -872,7 +872,12 @@ def trailing_summary(
 ) -> dict:
     """Build the trailing one-line record: top-cost queries first, as
     many as fit the byte budget; the tail is summarized (count + summed
-    seconds) so value == sum(queries) + queries_omitted_sec."""
+    seconds) so value == sum(queries) + queries_omitted_sec, to the
+    rounding of one field. Like worst_deltas, regressions keeps its
+    three largest deltas; regressions_omitted counts the rest."""
+    top_regressions = sorted(
+        regressions.items(), key=lambda kv: kv[1]["delta"], reverse=True
+    )[:3]
     base = {
         "metric": "headline_total",
         "value": total,
@@ -885,26 +890,34 @@ def trailing_summary(
         "queries_omitted": 0,
         "queries_omitted_sec": 0.0,
         "worst_deltas": worst,
-        "regressions": regressions,
+        "regressions": dict(top_regressions),
+        "regressions_omitted": len(regressions) - len(top_regressions),
     }
     ordered = sorted(timings.items(), key=lambda kv: (-kv[1], kv[0]))
-    # worst-case fixed cost if every entry were omitted
-    base["queries_omitted"] = len(ordered)
-    base["queries_omitted_sec"] = round(sum(v for _, v in ordered), 3)
-    line_len = len(json.dumps(base, separators=(",", ":")))
     picked: dict[str, float] = {}
-    omitted_sec = base["queries_omitted_sec"]
+    omitted_sec = round(sum(v for _, v in ordered), 3)
+
+    def fill() -> int:
+        """Write the picked entries into ``base``; the line's length."""
+        base["queries"] = picked
+        base["queries_omitted"] = len(ordered) - len(picked)
+        base["queries_omitted_sec"] = round(max(omitted_sec, 0.0), 3)
+        return len(json.dumps(base, separators=(",", ":")))
+
+    # worst-case fixed cost: every entry omitted
+    line_len = fill()
     for name, sec in ordered:
         # marginal cost of adding {"name":sec} (entry + comma)
         cost = len(json.dumps({name: round(sec, 3)}, separators=(",", ":"))) - 1
         if line_len + cost > TRAILING_BUDGET:
             break
         picked[name] = round(sec, 3)
-        omitted_sec -= sec
+        omitted_sec -= picked[name]
         line_len += cost
-    base["queries"] = picked
-    base["queries_omitted"] = len(ordered) - len(picked)
-    base["queries_omitted_sec"] = round(max(omitted_sec, 0.0), 3)
+    # the estimate above can miss by the few bytes a longer
+    # queries_omitted_sec adds; the serialized line is the check
+    while fill() > TRAILING_BUDGET and picked:
+        omitted_sec += picked.popitem()[1]
     return base
 
 

@@ -48,7 +48,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ibis_olap_aggregation_spark.operators.ranking import global_row_number
-from ibis_olap_aggregation_spark.session import dim_side
+from ibis_olap_aggregation_spark.session import dim_side, note_rows
 
 __all__ = ["HierarchyDimension", "prepare_nodes"]
 
@@ -75,22 +75,6 @@ def _depth_error(max_depth: int) -> ValueError:
     return ValueError(f"hierarchy deeper than max_depth={max_depth} (raise max_depth)")
 
 
-def _known_size_side(df: DataFrame, n_rows: int | None) -> DataFrame:
-    """dim_side twin for sides whose row count is ALREADY KNOWN (e.g.
-    bounded by a completed driver-local walk): applies the same
-    cap-based regime decision — broadcast under ``DIM_BROADCAST_ROW_CAP``
-    (read at call time so forced-regime tests still flip paths), merge
-    hint at/above it — without the probe's count job. Falls back to the
-    probing ``dim_side`` when the count is unknown."""
-    from ibis_olap_aggregation_spark import session as _session
-
-    if n_rows is None:
-        return dim_side(df)
-    if n_rows < _session.DIM_BROADCAST_ROW_CAP:
-        return F.broadcast(df)
-    return df.hint("merge")
-
-
 def prepare_nodes(
     nodes: DataFrame,
     node_id_col: str = "node_id",
@@ -114,11 +98,10 @@ def prepare_nodes(
       flag themselves — the driver-local walk derives it from the same
       collected rows for free.
 
-    ``known_rows``: pass an already-known node count to resolve the
-    leaf join's regime without the bounded count-probe job (the probe
-    cost one Spark job per dim build even when the prepared frame was
-    never executed — the local-walk path knows the count from its own
-    fetch).
+    ``known_rows``: an already-known node count, noted on the parent-id
+    side (``session.note_rows``) so the leaf join's regime resolves with
+    no probe job; ``HierarchyDimension`` always passes it, as both walks
+    know the count before the join is planned. ``None`` probes.
     """
     attrs = [c for c in nodes.columns if c not in (node_id_col, parent_node_id_col)]
     df = nodes.select(
@@ -135,10 +118,10 @@ def prepare_nodes(
         .withColumn("_is_parent", F.lit(True))
     )
     # one node-sized left join marks interior nodes; unmatched = leaves
-    # (bounded probe: broadcast for ordinary dims, sort-merge past the
-    # cap — a 10M-node hierarchy's parent set is past broadcast reach)
+    # (broadcast for ordinary dims, sort-merge past the cap — a
+    # 10M-node hierarchy's parent set is past broadcast reach)
     return (
-        df.join(_known_size_side(parents, known_rows), "node_id", "left")
+        df.join(dim_side(note_rows(parents, known_rows)), "node_id", "left")
         .withColumn("is_leaf", F.col("_is_parent").isNull())
         .drop("_is_parent")
     )
@@ -179,6 +162,10 @@ class HierarchyDimension:
     (:meth:`_walk_doubling`): ceil(log2 depth)+1 self-join rounds
     regardless of node count, each round localCheckpointed so the plan
     stays O(1). Both produce identical output (agreement-tested).
+
+    A build notes its closure row count on ``aggregation_dim``
+    (``session.note_rows``; on the doubling walk only when materialized),
+    so rollups resolve ``broadcast_dim="auto"`` with no probe job.
     """
 
     def __init__(
@@ -198,9 +185,6 @@ class HierarchyDimension:
         self.max_depth = max_depth
         self.flatten_levels = flatten_levels
         self.compute_sort_order = compute_sort_order
-        self._nodes_base = None
-        self._n_nodes: int | None = None
-        self._walked_local_count: int | None = None
         # compact-path artifacts of the local walk: the checkpointed
         # frame with integer ancestor-index paths and the single-row
         # broadcast attribute table. When set, the closure and reporting
@@ -212,32 +196,21 @@ class HierarchyDimension:
         self._compact = None
         self._attr_row = None
         self._walked = None  # the doubling walk's view; the local walk has none
-        local = self._fetch_if_dim_sized(
-            prepare_nodes(nodes, node_id_col, parent_node_id_col, with_leaf=False)
+        narrow = prepare_nodes(nodes, node_id_col, parent_node_id_col, with_leaf=False)
+        local = self._fetch_if_dim_sized(narrow)
+        # both walks know the node count before the leaf join is planned,
+        # so its regime (and the closure's sort-order attach) resolves
+        # from that count with no probe job
+        self._n_nodes = (
+            local.num_rows if local is not None else self._check_ids_distributed(narrow)
         )
-        if local is not None:
-            self._n_nodes = local.num_rows
-        # prepared AFTER the local fetch so that when the walk is local
-        # the leaf join's regime resolves from the just-learned node
-        # count instead of a probe job (the probe ran at construction
-        # even though the prepared frame is never executed on the local
-        # path — one count job per dim build, measured ~0.7s on the
-        # sf0.1 geo build). The doubling walk re-joins nodes once per
-        # round, and derived node tables (e.g. DISTINCT-built brand/type
-        # levels) would otherwise re-shuffle on every round — hence the
-        # cache below.
         self.nodes = prepare_nodes(
             nodes, node_id_col, parent_node_id_col, known_rows=self._n_nodes
         )
-        if local is None:
-            # distributed path: when materializing, cache the (possibly
-            # expensive) source-derived node table while the id check
-            # reads it; released after the walk is materialized (the
-            # repartitioned cache takes over)
-            base = self.nodes.cache() if materialize else self.nodes
-            self._n_nodes = self._check_ids_distributed(base)
         if materialize and local is None:
-            self._nodes_base = base
+            # The doubling walk re-joins nodes once per round, and derived
+            # node tables (e.g. DISTINCT-built brand/type levels) would
+            # otherwise re-shuffle on every round — hence the cache.
             # Size the walk's parallelism to the DIMENSION, not to the
             # partitioning the source scans happened to leave behind:
             # each round is a job over these partitions, so a 15k-node
@@ -249,7 +222,7 @@ class HierarchyDimension:
                 self.nodes.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
             )
             parts = min(cap, max(4, self._n_nodes // 250_000 + 1))
-            self.nodes = base.repartition(parts).cache()
+            self.nodes = self.nodes.repartition(parts).cache()
         if sort_key_col is None:
             sort_key_col = (
                 "node_natural_key" if "node_natural_key" in self.nodes.columns else "node_id"
@@ -260,15 +233,15 @@ class HierarchyDimension:
         self._struct_cols = list(self.nodes.columns)
 
         if local is not None:
-            self._walk_local(local)
+            closure_rows = self._walk_local(local)
         else:
+            closure_rows = None
             self._walked = self._walk_doubling()
             if materialize:
+                # both dims read it; the job that fills the cache also
+                # sums the depths, which is the closure row count
                 self._walked = self._walked.cache()
-                self._walked.count()  # both dims read it
-        if self._nodes_base is not None:
-            self._nodes_base.unpersist()
-            self._nodes_base = None
+                closure_rows = self._walked.agg(F.sum("level_number")).first()[0] or 0
         self.reporting_dim = self._build_reporting_dim()
         self.aggregation_dim = self._build_aggregation_dim()
         if materialize:
@@ -277,6 +250,8 @@ class HierarchyDimension:
             # consumer re-runs the path-explode + sort-order join
             self.reporting_dim = self.reporting_dim.cache()
             self.aggregation_dim = self.aggregation_dim.cache()
+        # rollups resolve "auto" from this bound instead of probing
+        note_rows(self.aggregation_dim, closure_rows)
 
     def _fetch_if_dim_sized(self, narrow: DataFrame):
         """The node table as a driver Arrow table (with ``is_leaf``
@@ -401,11 +376,12 @@ class HierarchyDimension:
             return None
 
     # -- stage 1a: driver-local walk for dim-sized node tables -----------
-    def _walk_local(self, tbl) -> None:
+    def _walk_local(self, tbl) -> int:
         """Driver-side DFS over the fetched Arrow node table, producing
         the compact walk both dims read: ``self._compact`` (attrs +
         level_number + ancestor row indices + node_sort_order) and
         ``self._attr_row`` (every node's attribute struct, one row).
+        Returns the closure row count (the walked nodes' summed depths).
 
         Dimension hierarchies are dim-sized by definition; under
         ``_LOCAL_WALK_LIMIT`` nodes the adjacency list fits trivially in
@@ -548,9 +524,9 @@ class HierarchyDimension:
                 ),
             )
         )
-        self._walked_local_count = n_out
         self._compact = compact
         self._attr_row = attr_row
+        return len(path_flat)
 
     @staticmethod
     def _cycle_ids(node_id: list, parent_id: list, visited: list) -> list:
@@ -800,12 +776,10 @@ class HierarchyDimension:
             F.col("node_id").alias("ancestor_node_id"),
             F.col("node_sort_order").alias("ancestor_node_sort_order"),
         )
-        # walked-derived and node-sized: on the local-walk path the row
-        # count is already known, so the regime resolves probe-free
+        # walked-derived and at most node-sized: the regime resolves from
+        # the node count, probe-free
         closure = closure.join(
-            _known_size_side(sort_orders, self._walked_local_count),
-            "ancestor_node_id",
-            "left",
+            dim_side(note_rows(sort_orders, self._n_nodes)), "ancestor_node_id", "left"
         )
         anc_cols = [f"ancestor_{c}" for c in self._attr_out_cols()] + [
             "ancestor_level_number",
@@ -1020,6 +994,3 @@ class HierarchyDimension:
         self.nodes.unpersist()
         self.reporting_dim.unpersist()
         self.aggregation_dim.unpersist()
-        if self._nodes_base is not None:
-            self._nodes_base.unpersist()
-            self._nodes_base = None

@@ -9,16 +9,17 @@ COUNT(DISTINCT), with zero recursion at query time.
 Every public function but ``merge_rollup_partials`` is a thin wrapper
 over ONE pipeline, parametrised by the kind of measure:
 
-1. resolve the closure side once — a slim (descendant key,
-   ``ancestor_node_id``) select and its join regime;
+1. resolve the join regime once per rollup, on the closure the
+   caller passed, and select its slim (descendant key,
+   ``ancestor_node_id``) side;
 2. run one leaf-grain branch per measure kind — generic aggregate
    Columns, additive exact-decimal partials, exact distinct (leaf key,
    value) pairs, or HLL sketches — each joined to the closure and
    aggregated on ``ancestor_node_id``;
 3. merge the branches on ``ancestor_node_id``;
 4. decorate: attach the node attributes (the closure's ``net_level = 0``
-   rows), cast exact sums to the presentation double where asked, and
-   sort by display order where asked.
+   rows) under that same regime, cast exact sums to the presentation
+   double where asked, and sort by display order where asked.
 
 Aggregating on the compact id and attaching the wide string attributes
 (node_name, level_name, ...) AFTER the aggregate matters at scale twice
@@ -28,7 +29,8 @@ display string (measured 8.1s -> ~3s for the sf0.1 part rollup's sums
 on local[32]). The closure is broadcast by default; for hierarchies too
 large to broadcast, pass ``broadcast_dim=False`` (every dim attach
 becomes a sort-merge join — plan-pinned broadcast-free) or ``"auto"``
-(row-count probe against CLOSURE_BROADCAST_ROW_CAP picks the regime).
+(the closure's row count against ``session.DIM_BROADCAST_ROW_CAP``, the
+one broadcast row cap, picks the regime; see ``_resolve_broadcast``).
 """
 
 from __future__ import annotations
@@ -37,6 +39,8 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from . import session
 
 __all__ = [
     "hierarchical_rollup",
@@ -56,15 +60,11 @@ DEFAULT_GROUP_KEYS = (
 
 _ID = "ancestor_node_id"
 
-# "auto" switches the closure join off broadcast past this many closure
-# rows (closure rows ~ nodes x avg depth; 2M rows x ~32 B of key+id is
-# ~64 MB serialized — at the practical broadcast ceiling). A module
-# constant so tests can force either regime.
-CLOSURE_BROADCAST_ROW_CAP = 2_000_000
 
-
-def _resolve_broadcast(dim_slim: DataFrame, broadcast_dim) -> bool:
-    """Resolve the join strategy for the rollup's dim-derived sides.
+def _resolve_broadcast(aggregation_dim: DataFrame, broadcast_dim) -> bool:
+    """Resolve the join strategy for the rollup's dim-derived sides —
+    one verdict per rollup, shared by the closure join, the branch
+    merges and the attribute attach.
 
     True  -> broadcast hints (the default: closures are dim-sized).
     False -> SHUFFLE_MERGE hints: every dim attach in the rollup becomes
@@ -72,15 +72,16 @@ def _resolve_broadcast(dim_slim: DataFrame, broadcast_dim) -> bool:
              closure (nodes x depth rows) is past broadcast reach
              (SURVEY §7.3 design note; the reference's flagship closure
              join, ref main.py:36, at the scale the brief names).
-    "auto" -> probe the closure row count once (one bounded count; dims
-             are cached after build, so this reads the cache) and pick.
+    "auto" -> True iff the closure has fewer than
+             ``session.DIM_BROADCAST_ROW_CAP`` rows (closure rows ~ nodes
+             x avg depth): a built dim's closure answers from its noted
+             row count with no job; any other closure (e.g. one read
+             back by ``HierarchyDimension.load``) is probed once.
     """
     if broadcast_dim is True or broadcast_dim is False:
         return broadcast_dim
     if broadcast_dim == "auto":
-        from .session import probe_small
-
-        return probe_small(dim_slim, CLOSURE_BROADCAST_ROW_CAP)
+        return session.probe_small(aggregation_dim, session.DIM_BROADCAST_ROW_CAP)
     raise ValueError(f"broadcast_dim must be True, False or 'auto': {broadcast_dim!r}")
 
 
@@ -113,9 +114,8 @@ def _per_node(
         )
     if not (measures or sum_cols or count_alias or distinct_cols or sketch):
         raise ValueError("no measures declared")
-    dim_slim = aggregation_dim.select(descendant_key_col, _ID)
-    bcast = _resolve_broadcast(dim_slim, broadcast_dim)
-    dim_slim = _dim_side(dim_slim, bcast)
+    bcast = _resolve_broadcast(aggregation_dim, broadcast_dim)
+    dim_slim = _dim_side(aggregation_dim.select(descendant_key_col, _ID), bcast)
 
     def expand(leaf: DataFrame, *aggs: Column) -> DataFrame:
         return (
@@ -157,7 +157,7 @@ def _decorate(
     per_node: DataFrame,
     aggregation_dim: DataFrame,
     group_keys: Sequence[str],
-    broadcast_dim: bool | str,
+    bcast: bool,
     *,
     double_cols: Sequence[str] = (),
     sort: bool = True,
@@ -165,9 +165,9 @@ def _decorate(
 ) -> DataFrame:
     """Step 4 of the pipeline: attach the ``group_keys`` present in the
     dim, one attribute row per node (the self-pairs; distinct when
-    net_level is absent). ``broadcast_dim`` is the attach's regime — a
-    resolved bool, or "auto" to probe it. ``keep_node_id`` leads with
-    the compact id for consumers that self-join the rolled table."""
+    net_level is absent), under the rollup's resolved regime ``bcast``.
+    ``keep_node_id`` leads with the compact id for consumers that
+    self-join the rolled table."""
     dim = aggregation_dim
     keys = [k for k in group_keys if k in dim.columns]
     attr_cols = [_ID, *[k for k in keys if k != _ID]]
@@ -176,7 +176,7 @@ def _decorate(
     else:
         attrs = dim.select(*attr_cols).distinct()
     lead = [_ID] if keep_node_id and _ID not in keys else []
-    out = per_node.join(_dim_side(attrs, _resolve_broadcast(attrs, broadcast_dim)), _ID).select(
+    out = per_node.join(_dim_side(attrs, bcast), _ID).select(
         *lead,
         *keys,
         *[
@@ -301,11 +301,11 @@ def hierarchical_rollup_sketch(
     the pre-aggregated leaf sketches can be stored and re-rolled to any
     grain without touching facts again. Estimates carry the standard
     HLL error (~1.04/sqrt(2^lgk)); exact paths remain the default."""
-    per_node, _ = _per_node(
+    per_node, bcast = _per_node(
         facts, aggregation_dim, fact_key_col, descendant_key_col, "auto",
         sketch=(distinct_col, lgk, out),
     )
-    return _decorate(per_node, aggregation_dim, group_keys, "auto", sort=False)
+    return _decorate(per_node, aggregation_dim, group_keys, bcast, sort=False)
 
 
 # ---------------------------------------------------------------------------
@@ -391,12 +391,14 @@ def finalize_rollup_partials(
     sort: bool = True,
 ) -> DataFrame:
     """Render a merged partial table to the one-shot rollup's output
-    shape: decorate node attributes (one row per node — broadcast under
-    the closure cap, sort-merge past it, probed like every dim attach),
+    shape: decorate node attributes (one row per node — broadcast while
+    the closure is under ``session.DIM_BROADCAST_ROW_CAP`` rows,
+    sort-merge past it, resolved once like every rollup's "auto"),
     cast the exact-decimal sums to the presentation double, sort by the
     hierarchy's display order. Keeping this a separate step is the
     point: the STORED partials stay exact and mergeable; only the
     query-time view pays the lossy cast."""
     return _decorate(
-        merged, aggregation_dim, group_keys, "auto", double_cols=sum_aliases, sort=sort
+        merged, aggregation_dim, group_keys, _resolve_broadcast(aggregation_dim, "auto"),
+        double_cols=sum_aliases, sort=sort,
     )

@@ -147,9 +147,9 @@ def spread_scan(df: DataFrame) -> DataFrame:
 # SF-LINEAR side (supplier = SFx10k, part = SFx200k, per-node/customer
 # aggregates, hierarchy node tables) becomes an executor-memory cliff at
 # 100x scale; 2M rows x ~32 B of join key + payload is ~64 MB serialized
-# — the practical broadcast ceiling (same bound as
-# rollup.CLOSURE_BROADCAST_ROW_CAP). Module constant so tests can force
-# either regime.
+# — the practical broadcast ceiling. The one broadcast row cap of the
+# dim attaches and the rollups' closure joins; a module constant so
+# tests can force either regime.
 DIM_BROADCAST_ROW_CAP = 2_000_000
 
 # Session-scoped memo of dim_side probe verdicts: a WeakKeyDictionary
@@ -171,6 +171,22 @@ import weakref as _weakref
 
 _DIM_SIDE_MEMO: "_weakref.WeakKeyDictionary" = _weakref.WeakKeyDictionary()
 DIM_SIDE_PROBE_STATS = {"probes": 0, "hits": 0}
+
+# Row bounds the engine already knows (a built dim's node and closure
+# row counts), keyed on the DataFrame OBJECT: DataFrames hash by
+# identity and .cache() returns self, so a bound noted on a frame
+# answers for exactly that frame and dies with it. Checked before the
+# memo, whose plan keys cannot tell createDataFrame-backed frames apart.
+_NOTED_ROWS: "_weakref.WeakKeyDictionary" = _weakref.WeakKeyDictionary()
+
+
+def note_rows(df: DataFrame, n: int | None) -> DataFrame:
+    """Record that ``df`` has at most ``n`` rows, so ``probe_small``
+    answers for it with no job; ``None`` records nothing. Returns
+    ``df``."""
+    if n is not None:
+        _NOTED_ROWS[df] = n
+    return df
 
 # Plan nodes whose canonicalized string carries NO data identity:
 # createDataFrame/RDD-backed frames all canonicalize to the same
@@ -212,19 +228,21 @@ def dim_side(
 ) -> DataFrame:
     """Broadcast-or-merge resolver for SF-LINEAR dim-derived join sides.
 
-    Probes the row count with a bounded ``limit(cap).count()`` (one
-    cheap job over a dim-sized input; on a query-cached input the probe
-    populates the cache the join then reads) and returns a broadcast
-    hint below the cap, a sort-merge hint at/above it — making
-    "broadcast-sized" a CHECKED bound instead of a docstring claim.
-    The verdict is memoized per (session, cap, canonical plan), so a
+    Returns a broadcast hint when ``probe_small`` finds ``df`` under
+    ``cap`` rows (default ``DIM_BROADCAST_ROW_CAP``, read at call time),
+    a sort-merge hint at/above it — making "broadcast-sized" a CHECKED
+    bound instead of a docstring claim. A row bound noted with
+    ``note_rows`` answers with no job; otherwise a bounded
+    ``limit(cap).count()`` probe runs (one cheap job over a dim-sized
+    input; on a query-cached input the probe populates the cache the
+    join then reads), memoized per (session, cap, canonical plan), so a
     bench pass pays ~#distinct-dims probe jobs, not #call-sites x
     #queries. Constant-size sides (nation/region's fixed 25/5 rows,
     single-row scalar aggregates, fixed-k codebooks/probes) keep their
     unconditional broadcast hints; see the broadcast audit table in
-    PARITY.md (tools/broadcast_audit.py keeps it honest). Mirrors
-    ``rollup._resolve_broadcast`` (closure cap) and graph's
-    node/edge-cap regime switches.
+    PARITY.md (tools/broadcast_audit.py keeps it honest). The rollups'
+    ``broadcast_dim="auto"`` resolves through the same ``probe_small``
+    and cap; graph keeps its own node/edge-cap regime switches.
 
     ``cache_if_probing`` (ADVICE r11 #4): for a DERIVED side (a plan
     with shuffles under it — an aggregate, an iterative closure), a
@@ -257,9 +275,15 @@ def dim_side(
 
 
 def probe_small(df: DataFrame, cap: int) -> bool:
-    """Memoized bounded row-count probe: True iff ``df`` has fewer than
-    ``cap`` rows. The shared verdict store behind ``dim_side`` and
-    rollup's ``broadcast_dim="auto"`` resolver."""
+    """True iff ``df`` has fewer than ``cap`` rows: from a bound noted
+    with ``note_rows`` when there is one (no job), else from the memo,
+    else from a bounded count probe. Either answer without a job counts
+    as a hit in ``DIM_SIDE_PROBE_STATS``. The one verdict store behind
+    ``dim_side`` and the rollups' ``broadcast_dim="auto"``."""
+    noted = _NOTED_ROWS.get(df)
+    if noted is not None:
+        DIM_SIDE_PROBE_STATS["hits"] += 1
+        return noted < cap
     memo, key = _dim_side_memo_entry(df, cap)
     if memo is not None and key in memo:
         DIM_SIDE_PROBE_STATS["hits"] += 1

@@ -461,3 +461,38 @@ def test_trailing_summary_fits_capture_window_and_reconciles():
     small = {"q%d" % i: 1.0 for i in range(5)}
     out2 = bench.trailing_summary(5.0, small, 0.1, 1.0, {}, {})
     assert out2["queries_omitted"] == 0 and len(out2["queries"]) == 5
+
+
+def test_trailing_summary_caps_regressions_and_reconciles_to_rounding():
+    """Many confirmed regressions must not push the trailing line past
+    its budget: like worst_deltas, the line keeps the three largest
+    regressions and counts the rest. With timings that are not exact at
+    3 dp, the published total still reconciles to the rounding of one
+    field."""
+    import json as _json
+
+    regressions = {
+        f"hierarchy_geo_rollup_orders_shuffled_regression_{i:03d}": {
+            "delta": 0.5 + i * 0.01, "isolated_median": 3.0 + i * 0.0137,
+        }
+        for i in range(40)
+    }
+    timings = {
+        f"hierarchy_part_rollup_orders_broadcast_variant_{i:03d}": 7.0 - i * 0.0123456
+        for i in range(120)
+    }
+    out = bench.trailing_summary(
+        round(sum(timings.values()), 3), timings, 0.1, 1.4,
+        {"some_query": 1.0}, regressions,
+    )
+    line = _json.dumps(out, separators=(",", ":"))
+    assert len(line) <= bench.TRAILING_BUDGET
+    assert list(out["regressions"]) == [
+        f"hierarchy_geo_rollup_orders_shuffled_regression_{i:03d}" for i in (39, 38, 37)
+    ]
+    assert out["regressions_omitted"] == 37
+    assert out["queries"]
+    assert out["queries_omitted"] == len(timings) - len(out["queries"])
+    assert abs(
+        sum(out["queries"].values()) + out["queries_omitted_sec"] - out["value"]
+    ) < 0.001

@@ -11,6 +11,9 @@ from __future__ import annotations
 import ibis_olap_aggregation_spark.session as sess
 from ibis_olap_aggregation_spark.fixtures import geo_nodes
 from ibis_olap_aggregation_spark.hierarchy import HierarchyDimension
+import pytest
+from ibis_olap_aggregation_spark import rollup as R
+from ibis_olap_aggregation_spark.plans import inspect as pi
 from ibis_olap_aggregation_spark.session import load_tables
 from pyspark.sql import functions as F
 
@@ -174,3 +177,92 @@ def test_cache_if_probing_caches_only_on_memo_miss(spark, sf_small):
     assert sess.DIM_SIDE_PROBE_STATS["hits"] == h0 + 1
     assert sess.DIM_SIDE_PROBE_STATS["probes"] == p0 + 1
     assert not derived2.storageLevel.useMemory
+
+
+def _probes():
+    return sess.DIM_SIDE_PROBE_STATS["probes"]
+
+
+def _jobs(spark, group, fn):
+    """Spark jobs ``fn`` runs, counted by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _sketch(facts, closure):
+    return R.hierarchical_rollup_sketch(facts, closure, "o_custkey", "o_orderkey")
+
+
+def _broadcasts(df) -> bool:
+    """Whether the executed plan broadcasts (a cached closure's own
+    build plan is not executed by the rollup, so it is left out)."""
+    return "BroadcastExchange" in pi._strip_non_executing(
+        pi.physical_plan(df, executed=True)
+    )
+
+
+@pytest.mark.parametrize("materialize", [False, True])
+def test_dim_build_runs_no_probe(spark, sf_small, regime, materialize):
+    """Both walks know the node count before the leaf join is planned,
+    so a build resolves every attach regime without a probe job."""
+    t = load_tables(spark, sf_small, ("region", "nation", "customer"))
+    p0 = _probes()
+    dim = HierarchyDimension(
+        geo_nodes(t["region"], t["nation"], t["customer"]),
+        sort_key_col="node_id",
+        materialize=materialize,
+    )
+    dim.reporting_dim.count()
+    dim.aggregation_dim.count()
+    assert _probes() == p0
+    dim.unpersist()
+
+
+def test_rollups_on_built_dim_run_no_probe(spark, sf_small, regime):
+    """A built dim's closure carries its row count, so the sketch
+    rollup, an "auto" rollup and finalize resolve their one regime
+    verdict without a probe job; the sketch rollup runs at most 5
+    jobs."""
+    dim = _build(spark, sf_small)
+    agg = dim.aggregation_dim
+    orders = load_tables(spark, sf_small, ("orders",))["orders"]
+    partials = R.hierarchical_rollup_partials(
+        orders, agg, "o_custkey", sum_cols=[("o_totalprice", "s")]
+    ).cache()
+    partials.count()
+    p0 = _probes()
+    assert _jobs(spark, f"sketch_{regime}", lambda: _sketch(orders, agg).collect()) <= 5
+    R.hierarchical_rollup_additive(
+        orders, agg, "o_custkey", sum_cols=[("o_totalprice", "s")], broadcast_dim="auto"
+    ).collect()
+    R.finalize_rollup_partials(partials, agg, sum_aliases=["s"]).collect()
+    assert _probes() == p0
+    partials.unpersist()
+    dim.unpersist()
+
+
+def test_loaded_closure_probes_once_and_picks_same_regime(
+    spark, sf_small, tmp_path, monkeypatch
+):
+    """A closure read back by ``HierarchyDimension.load`` carries no row
+    count: its rollup probes exactly once and lands on the regime the
+    built closure's noted count picks, under either cap."""
+    dim = _build(spark, sf_small)
+    dim.save(str(tmp_path))
+    _, loaded = HierarchyDimension.load(spark, str(tmp_path))
+    orders = load_tables(spark, sf_small, ("orders",))["orders"]
+    sess.clear_dim_side_memo()
+    p0 = _probes()
+    rolled = _sketch(orders, loaded)
+    assert _probes() == p0 + 1
+    assert _broadcasts(rolled)
+    assert _broadcasts(_sketch(orders, dim.aggregation_dim))
+    monkeypatch.setattr(sess, "DIM_BROADCAST_ROW_CAP", 1)
+    assert not _broadcasts(_sketch(orders, loaded))
+    assert not _broadcasts(_sketch(orders, dim.aggregation_dim))
+    dim.unpersist()

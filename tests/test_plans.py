@@ -58,6 +58,7 @@ def test_rollup_auto_regime_probes_row_count(spark, sf_small, monkeypatch):
     """broadcast_dim='auto' picks broadcast under the row cap and
     sort-merge above it (cap forced to 1 to simulate a 10M-node dim)."""
     from ibis_olap_aggregation_spark import rollup as r
+    from ibis_olap_aggregation_spark import session
 
     dim = q._geo_dim(spark, sf_small).aggregation_dim
     orders = load_table(spark, sf_small, "orders")
@@ -72,7 +73,7 @@ def test_rollup_auto_regime_probes_row_count(spark, sf_small, monkeypatch):
         )
 
     assert pi.has_broadcast_join(build())
-    monkeypatch.setattr(r, "CLOSURE_BROADCAST_ROW_CAP", 1)
+    monkeypatch.setattr(session, "DIM_BROADCAST_ROW_CAP", 1)
     plan = pi._strip_non_executing(pi.physical_plan(build(), executed=True))
     assert "BroadcastExchange" not in plan, plan
 

@@ -9,9 +9,12 @@ stating its bound fails the suite
 (tests/test_broadcast_audit.py::test_every_broadcast_site_classified).
 
 Classes:
-- resolver      the F.broadcast INSIDE a row-count-probed regime switch
-                (session.dim_side, rollup._dim_side, graph/analytic
-                _node_side, triangle edge-cap) — capped by construction
+- resolver      the F.broadcast INSIDE a row-bounded regime switch —
+                capped by construction: session.dim_side and
+                rollup._dim_side under the one DIM_BROADCAST_ROW_CAP
+                (a noted row bound or a bounded probe, both through
+                session.probe_small), graph/analytic _node_side and
+                the triangle edge-cap under their own caps
 - constant      fixed-cardinality inputs (nation=25, region=5, their
                 joins, literal grids/planes/probes/buckets)
 - single-row    global scalar aggregates (thresholds, totals, N)
@@ -24,8 +27,9 @@ Classes:
                 oracles for the capped production twin)
 - caller-bound  documented caller contract (streaming enrich dim)
 
-Sites that are NONE of these must route through a probe (dim_side /
-_resolve_broadcast) or drop the hint for AQE — see PARITY.md round 11.
+Sites that are NONE of these must route through session.dim_side /
+rollup._resolve_broadcast or drop the hint for AQE — see PARITY.md
+round 11.
 """
 
 from __future__ import annotations
@@ -81,18 +85,17 @@ RULES: list[tuple] = [
     # --- probe/regime resolvers: the only F.broadcast that may carry an
     # SF-linear side, because a bounded row-count probe guards it
     (r"session\.py$", r"return F\.broadcast\(df\)", "resolver",
-     "≤ DIM_BROADCAST_ROW_CAP = 2M rows (bounded limit(cap).count() probe)"),
+     "≤ DIM_BROADCAST_ROW_CAP = 2M rows (a noted row bound or the bounded "
+     "limit(cap).count() probe)"),
     (r"rollup\.py$", r"return F\.broadcast\(df\) if bcast", "resolver",
-     "≤ CLOSURE_BROADCAST_ROW_CAP = 2M rows (_resolve_broadcast probe)"),
+     "≤ DIM_BROADCAST_ROW_CAP = 2M rows (_resolve_broadcast: a noted row "
+     "bound or the probe)"),
     (r"graph\.py$", r"return F\.broadcast\(df\) if small_nodes", "resolver",
      "≤ PAGERANK_BROADCAST_NODE_CAP = 5M nodes (probe rides n_nodes count)"),
     (r"graph\.py$", r"na, nb = F\.broadcast\(na\), F\.broadcast\(nb\)", "resolver",
      "≤ TRIANGLE_BROADCAST_EDGE_CAP = 5M edges (bounded count; else merge)"),
     (r"analytic\.py$", r"return F\.broadcast\(df\) if small_nodes", "resolver",
      "≤ PAGERANK_BROADCAST_NODE_CAP = 5M nodes (probe on cached support)"),
-    (r"hierarchy\.py$", r"return F\.broadcast\(df\)", "resolver",
-     "≤ DIM_BROADCAST_ROW_CAP = 2M rows (_known_size_side: probe-free "
-     "twin of dim_side — cap guard on the known row count, prior line)"),
     # --- driver-assembled one-row frames (size gated before assembly)
     (r"hierarchy\.py$",
      r"crossJoin\(F\.broadcast\((?:self\._)?attr_row\)\)", "single-row",

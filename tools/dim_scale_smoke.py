@@ -147,7 +147,10 @@ if __name__ == "__main__":
 # skinny) table. No depth x nodes or quadratic term anywhere.
 #
 # Round-9 (2026-08-15), join-regime split at AMP=50 (closure 3.0M rows,
-# PAST the 2M "auto" cap, so auto picks sort-merge):
+# PAST the one 2M broadcast row cap, DIM_BROADCAST_ROW_CAP, so auto
+# picks sort-merge; since the build notes the closure row count, auto
+# decides from it without a probe job, and one verdict covers the
+# closure join and the attribute attach):
 #   base nodes=15,031  closure=60,086    build= 4.83s
 #        rollup_bcast=1.54s rollup_smj=1.31s rollup_auto=0.81s
 #   x50  nodes=750,031 closure=3,000,086 build=18.08s
